@@ -537,10 +537,12 @@ object Bench {
     // released after a JVM GC (ContextCleaner weak refs), and ~120
     // queries' worth measurably inflate late memory-hungry queries
     // (q_repetition: 1.5 s solo vs ~10 s late-suite). System.gc()
-    // would free them but evicts the soft-referenced codegen cache
-    // (measured: iterative queries 1.5-3× slower with a per-query
-    // GC), so broadcasts are dropped surgically via the block
-    // manager instead. Untimed.
+    // would free them but measured iterative queries 1.5-3× slower
+    // with a per-query GC (cause not isolated: Spark 4.1's codegen
+    // class cache is a NonFateSharingCache bounded at
+    // spark.sql.codegen.cache.maxEntries, default 100 — LRU by entry
+    // count, not cleared by a GC), so broadcasts are dropped
+    // surgically via the block manager instead. Untimed.
     def release(): Unit = {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       org.apache.spark.graft.MemoryRelease.dropBroadcasts()
@@ -557,9 +559,10 @@ object Bench {
     // probe_pr 38-41). Per-query back-to-back reps ARE 1.3-1.9×
     // faster than first runs (graft.Profile), but that warmth does
     // not survive 253 other queries between a query's warm and timed
-    // runs: the codegen class cache is soft-referenced and a heavier
-    // warm pass evicts exactly what it warmed (the System.gc()
-    // pathology documented at MemoryRelease.dropBroadcasts).
+    // runs: the codegen class cache is a NonFateSharingCache bounded at
+    // spark.sql.codegen.cache.maxEntries (default 100 entries, LRU),
+    // so the classes of the ~250 queries in between evict what a
+    // query's warm run compiled, however heavy the warm pass.
     spark.range(1000000).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).count()
     // Optional comma-separated subset for local iteration; the driver

@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, unix_micros}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
-  ShortType, TimestampNTZType, TimestampType}
+  ShortType, StructType, TimestampNTZType, TimestampType}
 
 /** Typed readers over the driver-generated parquet tables.
   *
@@ -12,8 +13,52 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
   * `.explain("formatted")` (ReadSchema / PushedFilters).
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Read `$dir/$name.parquet` with its schema resolved once per table
+    * version. Parquet schema inference is a Spark job (a footer read
+    * per file), and a chat question reads documents/embeddings about a
+    * dozen times — so the inferred schema is memoized per path under
+    * a version key: the leaf files (name, length, modification time)
+    * plus the session's parquet-reading confs. An unchanged table reads
+    * with `.schema(cached)` and fires no job; a rewrite or a conf
+    * toggle changes the key and Spark infers again, exactly as an
+    * unmemoized read would. A path that cannot be listed bypasses the
+    * memo so Spark raises its usual error.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = versionKey(spark, path)
+    Option(schemas.get(path)).filter(e => key.contains(e._1)) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(k => schemas.put(path, (k, df.schema)))
+        df
+    }
+  }
+
+  private type VersionKey = (Seq[(String, Long, Long)], Map[String, String])
+
+  /** path → (version key, schema inferred under it); one entry per path. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (VersionKey, StructType)]()
+
+  /** Session confs that can change what parquet schema inference returns. */
+  private val SchemaConfPrefixes =
+    Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.", "spark.sql.files.",
+      "spark.sql.caseSensitive")
+
+  private def versionKey(spark: SparkSession, path: String): Option[VersionKey] = {
+    val p = new Path(path)
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+      val confs = spark.conf.getAll.filter { case (k, _) => SchemaConfPrefixes.exists(k.startsWith) }
+      Some((files, confs))
+    } catch {
+      case _: java.io.IOException => None
+    }
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")

@@ -1,8 +1,10 @@
 package graft.cypher
 
 import graft.Ckpt.BarrierOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
 import graft.graph.{NewsGraph, Props}
@@ -1583,8 +1585,9 @@ object CypherLite {
   /** preSeed: an externally-built relation pre-binding ONE variable
     * (var name, its node label, a DataFrame whose node columns are
     * `<var>_*` plus any carried bare columns like `score`) — the
-    * CALL-procedure composition hook (runVector composes the vector
-    * top-k seed with the retrieval_query suffix through it).
+    * CALL-procedure composition hook (retrievalSuffix composes the
+    * vector/hybrid top-k seed with the retrieval_query suffix through
+    * it).
     */
   private def compile(spark: SparkSession, dir: String, q: Query,
       preSeed: Option[(String, String, DataFrame)]): DataFrame = {
@@ -2289,12 +2292,12 @@ object CypherLite {
 
   /** Compiles the vector CALL: brute-force cosine top-k against the
     * probe (Similarity.vectorQueryTopk — broadcast probe + TakeOrdered,
-    * the same plan qCosineTopk serves), the score attached to the
-    * document's representative chunk (the synthetic corpus embeds one
-    * vector per document; the Chunk-label node the reference's
-    * chunkEmbedding index holds), then the retrieval_query suffix
-    * compiled with that k-row seed pre-bound and broadcast into the
-    * expansion joins. Output order is Neo4jVector's score-descending
+    * the same plan qCosineTopk serves), collected on the driver and
+    * attached to each document's representative chunk (the synthetic
+    * corpus embeds one vector per document; the Chunk-label node the
+    * reference's chunkEmbedding index holds), then the
+    * retrieval_query suffix compiled over that k-row seed
+    * (retrievalSuffix). Output order is Neo4jVector's score-descending
     * with remaining columns as the deterministic tiebreak.
     */
   private def runVector(spark: SparkSession, dir: String,
@@ -2305,19 +2308,40 @@ object CypherLite {
     require(k >= 1 && k <= 1000, s"unsupported vector top-k $k")
     require(m.group(3) == "embedding",
       s"unknown vector parameter $$${m.group(3)} — the serving loop binds $$embedding")
-    val v = m.group(4)
+    retrievalSuffix(spark, dir, vectorLeg(spark, dir, k), m.group(4), m.group(5))
+  }
+
+  /** The vector CALL's top-k as (representative chunk uid, score),
+    * score-descending — k rows, collected on the driver.
+    */
+  private def vectorLeg(spark: SparkSession, dir: String, k: Int): Seq[(String, Double)] =
+    graft.operators.Similarity.vectorQueryTopk(spark, dir, k).collect().toSeq.map(r =>
+      (if (r.isNullAt(0)) null else s"Chunk:${r.getLong(0)}:0", r.getDouble(1)))
+
+  /** The retrieval_query suffix over a driver-side seed: `seed`'s
+    * (uid, score) rows become a local relation broadcast-joined to the
+    * Chunk node table, bound to `v`, and the suffix compiles through
+    * the ORDINARY grammar with that binding — so any retrieval_query a
+    * user writes composes, not just the reference's. The vector and
+    * hybrid CALLs share this one seed shape, so they compile the same
+    * suffix plan (and reuse its generated classes).
+    */
+  private def retrievalSuffix(spark: SparkSession, dir: String,
+      seed: Seq[(String, Double)], v: String, suffix: String): DataFrame = {
     val chunk = nodes(spark, dir, "Chunk")
-    val seed = broadcast(
-        graft.operators.Similarity.vectorQueryTopk(spark, dir, k)
-          .withColumn("suid", concat(lit("Chunk:"), col("doc_id"), lit(":0"))))
-      .join(chunk, col("suid") === chunk("uid"))
-      .select(chunk.columns.map(c => chunk(c).as(s"${v}_$c")).toSeq :+ col("score"): _*)
-    val out = compile(spark, dir, parseOne(m.group(5).trim), Some((v, "Chunk", seed)))
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(seed.map { case (u, s) => Row(u, s) }: _*), SeedSchema)
+    val bound = broadcast(local).join(chunk, Seq("uid"))
+      .select(chunk.columns.map(c => col(c).as(s"${v}_$c")).toSeq :+ col("score"): _*)
+    val out = compile(spark, dir, parseOne(suffix.trim), Some((v, "Chunk", bound)))
     require(out.columns.contains("score"),
-      "the vector CALL's RETURN must carry score through (Neo4jVector reads it)")
+      "a vector or hybrid CALL's RETURN must carry score through (Neo4jVector reads it)")
     out.orderBy(col("score").desc +:
       out.columns.filterNot(_ == "score").map(col).toSeq: _*)
   }
+
+  private val SeedSchema = StructType(Seq(
+    StructField("uid", StringType), StructField("score", DoubleType)))
 
   // ---------- CALL db.index.fulltext.queryNodes (round 9) ----------
 
@@ -2387,7 +2411,7 @@ object CypherLite {
     * cut is TakeOrdered. One scan of the node table feeds stats and
     * tf off a shared lazy checkpoint.
     */
-  private def textIndexTopk(spark: SparkSession, dir: String,
+  private[graft] def textIndexTopk(spark: SparkSession, dir: String,
       idx: GraphMeta.FtIndex, words: Seq[String], limit: Int): DataFrame = {
     import graft.operators.Retrieval.{Bm25B, Bm25K1}
     val nd = nodes(spark, dir, idx.label)
@@ -2482,14 +2506,14 @@ object CypherLite {
       """WITH\s+node\s+AS\s+(\w+)\s*,\s*score\s+(MATCH\s.*)$""").r
 
   /** Compiles the hybrid composition: the vector leg is the SAME
-    * serving seed as runVector (Similarity.vectorQueryTopk — shared
-    * scoredScan, broadcast probe + TakeOrdered); the keyword leg is
-    * the TEXT-index BM25 top-k (textIndexTopk over the chunkText
-    * index — the Lucene stand-in the r10 verdict asked to open to
-    * this CALL). Each leg normalizes by its own max via a broadcast
-    * 1-row aggregate (k rows per leg — trivial); the fused frame is
-    * a ≤2k-row groupBy. Determinism where Neo4j leaves ties
-    * unspecified: per-leg tiebreaks ride the leg top-ks, fusion
+    * serving seed as runVector (vectorLeg — Similarity.vectorQueryTopk,
+    * broadcast probe + TakeOrdered); the keyword leg is the TEXT-index
+    * BM25 top-k (textIndexTopk over the chunkText index — the Lucene
+    * stand-in the r10 verdict asked to open to this CALL). Both legs
+    * are collected on the driver (≤ k and ≤ limit rows) and fused
+    * there (fuseLegs); the fused top-k seeds the retrieval suffix
+    * exactly like the pure-vector path. Determinism where Neo4j leaves
+    * ties unspecified: per-leg tiebreaks ride the leg top-ks, fusion
     * breaks ties by (score DESC, uid), and the suffix output orders
     * score-descending with the remaining columns as tiebreak —
     * exactly what the oracle replays.
@@ -2511,34 +2535,42 @@ object CypherLite {
     val words = ftWords(kwIdx, m.group(5))
     val kwLimit = Option(m.group(6)).map(_.toInt).getOrElse(k)
     val fusedK = m.group(7).toInt
-    val v = m.group(8)
-    // vector leg: top-k (doc, score) on the representative chunk,
-    // normalized by the leg max
-    val vec = graft.operators.Similarity.vectorQueryTopk(spark, dir, k)
-      .select(concat(lit("Chunk:"), col("doc_id"), lit(":0")).as("uid"),
-        col("score"))
-      .barrier(false) // k rows: max + normalize read it
-    val vleg = vec.crossJoin(broadcast(vec.agg(max(col("score")).as("mx"))))
-      .select(col("uid"), round(col("score") / col("mx"), 6).as("score"))
-    // keyword leg: BM25 top-limit chunks, normalized by the leg max
-    val kw = textIndexTopk(spark, dir, kwIdx, words, kwLimit)
-      .barrier(false) // limit rows: max + normalize read it
-    val kleg = kw.crossJoin(broadcast(kw.agg(max(col("score")).as("mx"))))
-      .select(col("uid"), round(col("score") / col("mx"), 6).as("score"))
-    // max-score fusion + top-k cut (≤ 2k rows end to end)
-    val fused = vleg.unionByName(kleg)
-      .groupBy("uid").agg(max(col("score")).as("score"))
-      .orderBy(col("score").desc, col("uid"))
-      .limit(fusedK)
-    val chunk = nodes(spark, dir, "Chunk")
-    val seed = broadcast(fused)
-      .join(chunk, Seq("uid"))
-      .select(chunk.columns.map(c => col(c).as(s"${v}_$c")).toSeq :+ col("score"): _*)
-    val out = compile(spark, dir, parseOne(m.group(9).trim), Some((v, "Chunk", seed)))
-    require(out.columns.contains("score"),
-      "the hybrid CALL's RETURN must carry score through (Neo4jVector reads it)")
-    out.orderBy(col("score").desc +:
-      out.columns.filterNot(_ == "score").map(col).toSeq: _*)
+    val kw = textIndexTopk(spark, dir, kwIdx, words, kwLimit).collect().toSeq
+      .map(r => (r.getString(0), r.getDouble(1)))
+    val fused = fuseLegs(Seq(vectorLeg(spark, dir, k), kw), fusedK)
+    retrievalSuffix(spark, dir, fused, m.group(8), m.group(9))
+  }
+
+  /** Max-score fusion of the hybrid legs, in driver code with the
+    * arithmetic of the Spark plan it replaces: each leg's scores are
+    * divided by the leg max and rounded like Spark's `round(x, 6)` on a
+    * double (HALF_UP on the decimal string); the legs are reduced per
+    * uid by max; the top `k` survive by (score DESC, uid ASC) in
+    * Spark's orderings — doubles with NaN largest and ±0 equal, strings
+    * by UTF-8 bytes with NULL first. A leg whose max is 0 raises
+    * [DIVIDE_BY_ZERO], as the ANSI division did; an empty leg adds
+    * nothing.
+    */
+  private[graft] def fuseLegs(legs: Seq[Seq[(String, Double)]], k: Int): Seq[(String, Double)] = {
+    def cmpScore(a: Double, b: Double): Int = if (a == b) 0 else java.lang.Double.compare(a, b)
+    def cmpUid(a: String, b: String): Int =
+      if (a == null || b == null) (if (a == null) 0 else 1) - (if (b == null) 0 else 1)
+      else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+    def round6(x: Double): Double =
+      if (x.isNaN || x.isInfinite) x
+      else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    def maxOf(a: Double, b: Double): Double = if (cmpScore(a, b) >= 0) a else b
+    val scored = legs.filter(_.nonEmpty).flatMap { leg =>
+      val mx = leg.map(_._2).reduce(maxOf)
+      if (mx == 0.0) throw org.apache.spark.sql.graft.shims.divideByZero()
+      leg.map { case (u, s) => (u, round6(s / mx)) }
+    }
+    scored.groupMapReduce(_._1)(_._2)(maxOf).toSeq
+      .sortWith { case ((ua, sa), (ub, sb)) =>
+        val c = cmpScore(sb, sa)
+        if (c != 0) c < 0 else cmpUid(ua, ub) < 0
+      }
+      .take(k)
   }
 
   private def runShortestPath(spark: SparkSession, dir: String,

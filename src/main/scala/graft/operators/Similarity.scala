@@ -29,23 +29,14 @@ object Similarity {
   val IvfTrainSample = 4096 // vec_id cap bounding the training sample
 
   /** dot(a,b) — native generated loop (arrays must be double); the
-    * accumulation order matches the portable HOF twin below
-    * bit-for-bit, so every oracle is unchanged (SimilaritySpec).
+    * accumulation order matches the portable HOF twin (CosineSimSpec)
+    * bit-for-bit, so every oracle is unchanged.
     */
   def dotCol(a: Column, b: Column): Column =
     graft.functions.DotProduct.dot_product(a, b)
 
-  /** Portable HOF twin of dotCol (zip_with + left fold) — the
-    * executable spec of the accumulation order.
-    */
-  private[graft] def dotColHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   def normCol(a: Column): Column =
     sqrt(graft.functions.DotProduct.dot_product(a, a))
-
-  private[graft] def normColHof(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
 
   def cosineCol(a: Column, b: Column): Column =
     dotCol(a, b) / (normCol(a) * normCol(b))
@@ -681,10 +672,6 @@ object Similarity {
 
   private def sqDist(a: Column, b: Column): Column =
     graft.functions.SqDist.sq_dist(a, b)
-
-  /** Portable HOF twin of sqDist (accumulation-order spec). */
-  private[graft] def sqDistHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, c) => (x - c) * (x - c)), lit(0.0), (acc, x) => acc + x)
 
   /** (vec_id, m, x0, x1): the M 2-dim subvectors of each vector, with
     * components on the integer micro grid (round(x·1e6) as BIGINT).

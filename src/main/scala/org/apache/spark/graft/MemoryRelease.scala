@@ -15,11 +15,14 @@ object MemoryRelease {
     * its driver-side object is GC'd; over a ~120-query benchmark the
     * accumulated blocks occupy unified storage memory and push
     * memory-hungry aggregations into spills. Calling System.gc()
-    * instead would release them too — but a full GC also evicts the
-    * soft-referenced codegen class cache, which measurably slows
-    * every subsequent iterative query. This removal is targeted:
-    * block-manager state only, JVM caches untouched. Safe between
-    * queries because no plan re-reads a prior query's broadcast.
+    * instead would release them too — but a per-query full GC
+    * measurably slowed every subsequent iterative query (cause not
+    * isolated; not the codegen class cache, which in Spark 4.1 is a
+    * NonFateSharingCache bounded at spark.sql.codegen.cache.maxEntries,
+    * default 100, evicted by entry count rather than by GC). This
+    * removal is targeted: block-manager state only, JVM caches
+    * untouched. Safe between queries because no plan re-reads a prior
+    * query's broadcast.
     */
   def dropBroadcasts(): Unit = {
     val master = SparkEnv.get.blockManager.master

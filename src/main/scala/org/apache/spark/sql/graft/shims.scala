@@ -17,4 +17,9 @@ object shims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+  /** The [DIVIDE_BY_ZERO] error an ANSI division raises, for driver code
+    * that replays such a division.
+    */
+  def divideByZero(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 }

@@ -8,13 +8,14 @@ import graft.operators.Similarity
 
 class CosineSimSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  import CosineSimSpec._
 
   test("native fused expression is bit-identical to the HOF fold") {
     val e = Similarity.vectors(spark, TestSpark.sf).limit(100)
     val q = Similarity.vectors(spark, TestSpark.sf)
       .filter(col("vec_id") === 0).select(col("v").as("qv"))
     def hofCosine(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      Similarity.dotColHof(a, b) / (Similarity.normColHof(a) * Similarity.normColHof(b))
+      dotColHof(a, b) / (normColHof(a) * normColHof(b))
     val both = e.crossJoin(q)
       .select(
         CosineSim.cosine_sim(col("v"), col("qv")).as("native"),
@@ -29,10 +30,10 @@ class CosineSimSpec extends AnyFunSuite {
       .filter(col("vec_id") === 0).select(col("v").as("qv"))
     val both = e.crossJoin(q).select(
       Similarity.dotCol(col("v"), col("qv")).as("dn"),
-      Similarity.dotColHof(col("v"), col("qv")).as("dh"),
+      dotColHof(col("v"), col("qv")).as("dh"),
       Similarity.normCol(col("v")).as("nn"),
-      Similarity.normColHof(col("v")).as("nh"),
-      Similarity.sqDistHof(col("v"), col("qv")).as("sh"),
+      normColHof(col("v")).as("nh"),
+      sqDistHof(col("v"), col("qv")).as("sh"),
       graft.functions.SqDist.sq_dist(col("v"), col("qv")).as("sn"))
     val bad = both.filter(
       col("dn") =!= col("dh") || col("nn") =!= col("nh") || col("sn") =!= col("sh"))
@@ -53,7 +54,7 @@ class CosineSimSpec extends AnyFunSuite {
       graft.functions.DotProduct.dot_product(col("a"), col("b")).as("d"),
       graft.functions.SqDist.sq_dist(col("a"), col("b")).as("s"),
       CosineSim.cosine_sim(col("a"), col("b")).as("c"),
-      Similarity.dotColHof(col("a"), col("b")).as("dh")).head()
+      dotColHof(col("a"), col("b")).as("dh")).head()
     assert(r.isNullAt(0), "dot_product must be NULL on a null element")
     assert(r.isNullAt(1), "sq_dist must be NULL on a null element")
     assert(r.isNullAt(2), "cosine_sim must be NULL on a null element")
@@ -78,4 +79,21 @@ class CosineSimSpec extends AnyFunSuite {
         .collect()
     }
   }
+}
+
+/** Portable HOF twins of the native vector primitives (zip_with + left
+  * fold) — the executable spec of their accumulation order and
+  * null-poisoning.
+  */
+object CosineSimSpec {
+  import org.apache.spark.sql.Column
+
+  def dotColHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+
+  def normColHof(a: Column): Column =
+    sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
+
+  def sqDistHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, c) => (x - c) * (x - c)), lit(0.0), (acc, x) => acc + x)
 }

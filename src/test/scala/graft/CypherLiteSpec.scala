@@ -1376,6 +1376,130 @@ class CypherLiteSpec extends AnyFunSuite {
     }
   }
 
+  // ---------- hybrid fusion edge cases ----------
+
+  /** A documents + embeddings dir with one short chunk per document;
+    * `axes` maps each vec_id to the unit axes its embedding sums (the
+    * probe, vec 0, is axis 0 — so the cosine scores are chosen here).
+    */
+  private def hybridDir(axes: Map[Long, Seq[Int]]): String = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val d = java.nio.file.Files.createTempDirectory("graft_hybrid").toString
+    val docs = Seq((0L, "probe document", "s0"), (1L, "graph join plans", "s1"),
+      (2L, "window functions", "s1"), (3L, "graph graph graph", "s2"),
+      (10L, "broadcast hints", "s2"), (11L, "graph of sources", "s0"))
+    spark.createDataFrame(java.util.Arrays.asList(docs.map { case (id, t, src) =>
+        Row(id, t, "en", src, t.length.toLong) }: _*),
+      StructType(Seq(StructField("doc_id", LongType, false), StructField("text", StringType),
+        StructField("lang", StringType), StructField("source", StringType),
+        StructField("n_chars", LongType, false))))
+      .write.parquet(s"$d/documents.parquet")
+    spark.createDataFrame(java.util.Arrays.asList(axes.toSeq.sortBy(_._1).map { case (id, as) =>
+        Row(id, Seq.tabulate(graft.operators.Similarity.Dim)(i => as.count(_ == i).toFloat), 0) }: _*),
+      StructType(Seq(StructField("vec_id", LongType, false),
+        StructField("embedding", ArrayType(FloatType)), StructField("label", IntegerType, false))))
+      .write.parquet(s"$d/embeddings.parquet")
+    d
+  }
+
+  /** The hybrid composition with vector top-`k`, a 3-hit keyword leg
+    * and a fused LIMIT, projecting each fused chunk's uid and score.
+    */
+  private def hybridQuery(k: Int, keywords: String, fusedK: Int): String = {
+    def leg(call: String) = s"$call YIELD node, score " +
+      "WITH collect({node: node, score: score}) AS nodes, max(score) AS max " +
+      "UNWIND nodes AS n RETURN n.node AS node, (n.score / max) AS score"
+    "CALL { " +
+      leg(s"CALL db.index.vector.queryNodes('chunkEmbedding', $k, $$embedding)") + " UNION " +
+      leg(s"CALL db.index.fulltext.queryNodes('chunkText', '$keywords', {limit: 3})") +
+      s" } WITH node, max(score) AS score ORDER BY score DESC LIMIT $fusedK " +
+      "WITH node AS chunk, score MATCH (chunk)<-[:CONTAINS]-(a) RETURN chunk.uid AS uid, score"
+  }
+
+  test("hybrid CALL: fusion edge cases give the rows of the Spark fusion plan") {
+    // cosine vs the axis-0 probe: docs 1, 2, 10 tie at 0.707107 (2 and
+    // 10 identical), doc 3 scores 0.447214, doc 11 is orthogonal; BM25
+    // for 'graph' ranks doc 3 over docs 1 and 11 (tied). Expected rows
+    // are those the Spark plan (union → max per uid → TakeOrdered by
+    // score DESC, uid) returns on this fixture.
+    val d = hybridDir(Map(0L -> Seq(0), 1L -> Seq(0, 1), 2L -> Seq(0, 2),
+      10L -> Seq(0, 2), 3L -> Seq(0, 1, 1), 11L -> Seq(1)))
+    def rows(kw: String, fusedK: Int) = CypherLite.run(spark, d, hybridQuery(3, kw, fusedK))
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    // exact ties cut by uid in string order: "Chunk:10:0" < "Chunk:1:0"
+    // < "Chunk:2:0" < "Chunk:3:0", so doc 3 (keyword top, 1.0) misses
+    // the cut that numeric order would have kept it in
+    assert(rows("graph", 3) == Seq("Chunk:10:0" -> 1.0, "Chunk:1:0" -> 1.0, "Chunk:2:0" -> 1.0))
+    assert(rows("graph", 2) == Seq("Chunk:10:0" -> 1.0, "Chunk:1:0" -> 1.0))
+    // doc 1 is in both legs: its vector 1.0 beats its keyword 0.613445
+    assert(rows("graph", 5) == Seq("Chunk:10:0" -> 1.0, "Chunk:1:0" -> 1.0,
+      "Chunk:2:0" -> 1.0, "Chunk:3:0" -> 1.0, "Chunk:11:0" -> 0.613445))
+    // a keyword leg with no hits: the vector leg alone fuses
+    assert(rows("zebra", 3) == Seq("Chunk:10:0" -> 1.0, "Chunk:1:0" -> 1.0, "Chunk:2:0" -> 1.0))
+  }
+
+  private def condition(e: Throwable): String = e match {
+    case t: org.apache.spark.SparkThrowable => t.getCondition
+    case _ => null
+  }
+
+  test("hybrid CALL: a leg whose max is 0 fails with DIVIDE_BY_ZERO, never NaN rows") {
+    // every vector orthogonal to the probe: the vector leg's max is 0,
+    // and `n.score / max` is an ANSI division by zero
+    val d = hybridDir(Map(0L -> Seq(0), 1L -> Seq(1), 2L -> Seq(2),
+      10L -> Seq(3), 3L -> Seq(4), 11L -> Seq(5)))
+    val e = intercept[ArithmeticException] {
+      CypherLite.run(spark, d, hybridQuery(3, "graph", 3)).collect()
+    }
+    assert(condition(e) == "DIVIDE_BY_ZERO", e.getMessage)
+  }
+
+  test("hybrid fusion: driver-side fuseLegs replays the Spark fusion plan") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{broadcast, max, round}
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("uid", StringType), StructField("score", DoubleType)))
+    // the Spark plan the driver-side fusion replaces, verbatim
+    def sparkFusion(legs: Seq[Seq[(String, Double)]], k: Int): Seq[(String, Double)] =
+      legs.map { leg =>
+        val df = spark.createDataFrame(
+          java.util.Arrays.asList(leg.map { case (u, sc) => Row(u, sc) }: _*), schema)
+        df.crossJoin(broadcast(df.agg(max(col("score")).as("mx"))))
+          .select(col("uid"), round(col("score") / col("mx"), 6).as("score"))
+      }.reduce(_ unionByName _)
+        .groupBy("uid").agg(max(col("score")).as("score"))
+        .orderBy(col("score").desc, col("uid")).limit(k)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    val cases = Seq(
+      // empty keyword leg
+      Seq(Seq("Chunk:1:0" -> 0.9, "Chunk:2:0" -> 0.3), Seq.empty),
+      // overlap: max wins; uid ties in string (UTF-8 byte) order
+      Seq(Seq("Chunk:1:0" -> 0.5, "Chunk:10:0" -> 0.5, "Chunk:2:0" -> 0.25),
+        Seq("Chunk:2:0" -> 7.0, "Chunk:1:0" -> 3.5, "é" -> 7.0, "z" -> 7.0,
+          "\uD83C\uDF89" -> 7.0, "\uFF21" -> 7.0)),
+      // HALF_UP at the 6th place, negative scores and a negative max
+      Seq(Seq("a" -> 1.0, "b" -> 0.0000025, "c" -> 0.1234565, "d" -> -0.5),
+        Seq("e" -> -2.0, "f" -> -3.0, "g" -> -6.0000015)),
+      // a NULL uid sorts first among ties
+      Seq(Seq("b" -> 1.0, (null: String) -> 2.0), Seq("a" -> 4.0)))
+    for (legs <- cases; k <- Seq(1, 3, 10))
+      assert(CypherLite.fuseLegs(legs, k) == sparkFusion(legs, k), s"k=$k legs=$legs")
+    val rnd = new scala.util.Random(7)
+    for (_ <- 1 to 5) {
+      def leg(n: Int) = Seq.fill(n)(s"Chunk:${rnd.nextInt(12)}:0" -> rnd.nextInt(4) / 3.0)
+        .groupBy(_._1).map(_._2.head).toSeq :+ ("top" -> 1.5)
+      val legs = Seq(leg(6), leg(6))
+      assert(CypherLite.fuseLegs(legs, 5) == sparkFusion(legs, 5), s"legs=$legs")
+    }
+    // a zero leg max: both raise DIVIDE_BY_ZERO
+    val zero = Seq(Seq("a" -> 0.0, "b" -> -1.0), Seq("c" -> 2.0))
+    for (run <- Seq(() => CypherLite.fuseLegs(zero, 3), () => sparkFusion(zero, 3))) {
+      val e = intercept[ArithmeticException](run())
+      assert(condition(e) == "DIVIDE_BY_ZERO", e.getMessage)
+    }
+  }
+
   test("path variables on ordinary MATCH: p ≡ uid composition; length is the hop count") {
     def rows(q: String) = CypherLite.run(spark, TestSpark.sf, q)
       .collect().map(_.toSeq).toSeq

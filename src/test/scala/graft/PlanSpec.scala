@@ -149,24 +149,35 @@ class PlanSpec extends AnyFunSuite {
     assert(df.collect().map(_.toSeq).toSeq == exact)
   }
 
+  /** The driver-side (uid, score) seed of the vector and hybrid CALLs. */
+  private val LocalSeed = """LocalTableScan \[uid#\d+, score#\d+\]""".r
+
   test("vector CALL: TakeOrdered seed, no cartesian in the expansion") {
     // the probe crossJoin(broadcast(1 row)) is the accepted
-    // BroadcastNestedLoop probe shape (qCosineTopk's); the k-row seed
-    // must rank through TakeOrdered and the CONTAINS/PUBLISHED
-    // expansion must stay equi-join — no CartesianProduct anywhere
+    // BroadcastNestedLoop probe shape (qCosineTopk's); the k-row leg
+    // must rank through TakeOrdered. The CALL collects that leg and
+    // seeds the suffix from a local relation, so the CALL's own plan
+    // scans a LocalTableScan and its CONTAINS/PUBLISHED expansion must
+    // stay equi-join — no CartesianProduct anywhere
+    val leg = plan(Similarity.vectorQueryTopk(spark, TestSpark.sf, 5))
+    assert(leg.contains("TakeOrderedAndProject"), s"vector leg not TakeOrdered:\n$leg")
     val p = plan(cypher.CypherLite.run(spark, TestSpark.sf,
       cypher.CypherLite.ExVec))
-    assert(p.contains("TakeOrderedAndProject"), s"seed not TakeOrdered:\n$p")
+    assert(LocalSeed.findFirstIn(p).nonEmpty, s"suffix not seeded from a local relation:\n$p")
     assert(!p.contains("CartesianProduct"), s"vector CALL has a cartesian:\n$p")
   }
 
   test("hybrid CALL and round-11 cypher plans: TakeOrdered legs, equi-join only") {
-    // hybrid: both legs rank through TakeOrdered; the fusion +
-    // expansion stay equi-join (the broadcast probe / 1-row max
-    // crossJoins are the accepted BroadcastNestedLoop shapes)
+    // hybrid: both legs rank through TakeOrdered (the vector leg is
+    // asserted above; the keyword leg is the chunkText BM25 top-k);
+    // the CALL fuses them on the driver and seeds the suffix from a
+    // local relation, whose expansion stays equi-join
+    val kw = plan(cypher.CypherLite.textIndexTopk(spark, TestSpark.sf,
+      cypher.CypherLite.GraphMeta.ftIndexes("chunktext"), Seq("spark", "join", "fast"), 5))
+    assert(kw.contains("TakeOrderedAndProject"), s"keyword leg not TakeOrdered:\n$kw")
     val ph = plan(cypher.CypherLite.run(spark, TestSpark.sf,
       cypher.CypherLite.ExHybrid))
-    assert(ph.contains("TakeOrderedAndProject"), s"legs not TakeOrdered:\n$ph")
+    assert(LocalSeed.findFirstIn(ph).nonEmpty, s"suffix not seeded from a local relation:\n$ph")
     assert(!ph.contains("CartesianProduct"), s"hybrid CALL has a cartesian:\n$ph")
     // per-hop-filtered + multi-type var-length expansions and the
     // path-value render: equi-joins only, no NL joins beyond the

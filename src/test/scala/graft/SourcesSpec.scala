@@ -10,6 +10,56 @@ import graft.sources.Catalog
 class SourcesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  /** Spark jobs started while `body` runs (listener bus drained after). */
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.MemoryRelease.drainListeners(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.graft.MemoryRelease.drainListeners(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("schema memo: an unchanged table reads without a schema-inference job") {
+    Tables.documents(spark, TestSpark.sf)
+    assert(jobsDuring(Tables.documents(spark, TestSpark.sf)) == 0,
+      "a repeated read of an unchanged table must not infer its schema again")
+    // the memoized read is the same relation an inferring read builds
+    assert(Tables.documents(spark, TestSpark.sf).schema ==
+      spark.read.parquet(s"${TestSpark.sf}/documents.parquet").schema)
+  }
+
+  test("schema memo: a rewritten table shows its new column on the next read") {
+    val d = Files.createTempDirectory("graft_memo").toString
+    val docs = Tables.documents(spark, TestSpark.sf).limit(5)
+    docs.write.parquet(s"$d/documents.parquet")
+    assert(!Tables.documents(spark, d).columns.contains("extra"))
+    docs.withColumn("extra", lit(1)).write.mode("overwrite").parquet(s"$d/documents.parquet")
+    val reread = Tables.documents(spark, d)
+    assert(reread.columns.contains("extra"), s"stale schema after rewrite: ${reread.columns.toSeq}")
+    assert(reread.filter(col("extra") === 1).count() == 5)
+  }
+
+  test("schema memo: toggling a parquet-reading conf infers the schema again") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val old = spark.conf.get(key)
+    Tables.events(spark, TestSpark.sf)
+    try {
+      assert(jobsDuring(Tables.table(spark, TestSpark.sf, "events")) == 0)
+      spark.conf.set(key, "false")
+      assert(jobsDuring(Tables.table(spark, TestSpark.sf, "events")) > 0,
+        s"toggling $key must re-infer the events schema")
+      spark.conf.set(key, old)
+      assert(jobsDuring(Tables.table(spark, TestSpark.sf, "events")) > 0)
+      assert(jobsDuring(Tables.events(spark, TestSpark.sf)) == 0)
+    } finally spark.conf.set(key, old)
+  }
+
   test("bucketed tables join without an Exchange on the join keys") {
     Catalog.materializeGraph(spark, TestSpark.sf)
     // force the sort-merge path so bucket co-location (not broadcast)
