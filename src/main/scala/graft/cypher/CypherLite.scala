@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
-import graft.graph.{NewsGraph, Props}
+import graft.graph.{Loops, NewsGraph, Props}
 import graft.operators.TextPipeline
 
 /** CypherLite: a compiler for the linear-path Cypher subset that the
@@ -2251,15 +2251,15 @@ object CypherLite {
     * connected" primitive graph-RAG asks constantly. Undirected hop
     * syntax (`-…-`): the stored edge tables are both-direction.
     *
-    * Compiled as bounded BFS (the qShortestPath frontier loop — min
-    * distances only tighten, hi rounds), seeded at the a-anchor, then
-    * filtered to the b-anchor with the minimum path length — NOT the
-    * var-length path unroll: shortestPath needs only the distance, so
-    * enumerating every path (deg^hi of them) to keep one would be the
-    * wrong plan at any scale; frontier BFS carries one row per
-    * reached node. No row when b is unreachable within hi (Cypher
-    * returns no match). hi beyond the unroll's *..2 bound is fine
-    * here for the same reason.
+    * Compiled as bounded BFS (Loops.relaxMin, the loop qShortestPath
+    * runs — min distances only tighten, hi rounds), seeded at the
+    * a-anchor, then filtered to the b-anchor with the minimum path
+    * length — NOT the var-length path unroll: shortestPath needs only
+    * the distance, so enumerating every path (deg^hi of them) to keep
+    * one would be the wrong plan at any scale; frontier BFS carries
+    * one row per reached node. No row when b is unreachable within hi
+    * (Cypher returns no match). hi beyond the unroll's *..2 bound is
+    * fine here for the same reason.
     */
   private val SpRe =
     ("""^MATCH\s+(\w+)\s*=\s*shortestPath\(\(\w+:(\w+)\s*\{name:\s*'([^']*)'\}\)""" +
@@ -2573,6 +2573,17 @@ object CypherLite {
       .take(k)
   }
 
+  /** The `*lo..hi` bounds every shortestPath/allShortestPaths form
+    * accepts: a minimal length of 1 (Neo4j rejects anything but 0 or 1
+    * for these functions, and the BFS keeps only each node's minimum
+    * distance, so a filter on `lo > 1` would silently drop endpoints
+    * closer than `lo`) and at most 8 hops.
+    */
+  private def checkPathBounds(fn: String, lo: Int, hi: Int): Unit =
+    if (lo != 1 || hi < 1 || hi > 8)
+      throw new IllegalArgumentException(
+        s"$fn: unsupported bounds *$lo..$hi (the minimal length must be 1, the maximal 1 to 8)")
+
   private def runShortestPath(spark: SparkSession, dir: String,
       m: scala.util.matching.Regex.Match): DataFrame = {
     val (srcLabel, srcName) = (m.group(2), m.group(3))
@@ -2580,50 +2591,27 @@ object CypherLite {
     val (dstLabel, dstName) = (m.group(7), m.group(8))
     val weighted = m.group(9) == "wlength"
     require(m.group(1) == m.group(10), s"${m.group(9)}() must reference the path variable")
-    require(lo >= 1 && lo <= hi && hi <= 8, s"unsupported shortestPath bounds *$lo..$hi")
-    val srcUid = s"$srcLabel:$srcName"
-    val dstUid = s"$dstLabel:$dstName"
-    if (weighted) {
-      // WEIGHTED shortest path — `wlength(p)`: minimum path COST over
-      // the reciprocal-weight edge length 1000000 div weight (stronger
-      // tie → shorter edge — qWeightedShortestPath's exact cost rule),
-      // relaxed by `hi` Bellman-Ford rounds over the same frontier-join
-      // loop. Neo4j reaches this through GDS Dijkstra; CypherLite
-      // exposes it as wlength() on the shortestPath pattern so "how
-      // STRONGLY are X and Y connected" composes with the r.weight
-      // property ex24 made readable. Only the weighted relationship
-      // supports it; `lo` must be 1 (the bound counts hops, which a
-      // cost-relaxation loop does not track).
-      require(rel == "CO_OCCURS", s"wlength needs a weighted relationship, not $rel")
-      require(lo == 1, "wlength supports *1..k bounds only")
-      val e = edgesWithProps(spark, dir, rel, None)
-        .selectExpr("src_uid", "dst_uid", "1000000 div weight AS cost")
-        .barrier(false)
-      var dist = spark.range(1)
-        .select(lit(srcUid).as("node"), lit(0L).as("dist"))
-      for (i <- 1 to hi) {
-        val relaxed = dist.join(e, dist("node") === e("src_uid"))
-          .select(col("dst_uid").as("node"), (col("dist") + col("cost")).as("dist"))
-        dist = dist.unionByName(relaxed)
-          .groupBy("node").agg(min(col("dist")).as("dist"))
-        if (i % 3 == 0 || i == hi) dist = dist.barrier(false)
-      }
-      dist.filter(col("node") === dstUid)
-        .select(col("dist").as(m.group(11)))
-    } else {
-      val e = edges(spark, dir, rel, dstLabel).barrier(false)
-      var dist = spark.range(1)
-        .select(lit(srcUid).as("node"), lit(0L).as("dist"))
-      for (i <- 1 to hi) {
-        val relaxed = dist.join(e, dist("node") === e("src_uid"))
-          .select(col("dst_uid").as("node"), (col("dist") + 1L).as("dist"))
-        dist = dist.unionByName(relaxed)
-          .groupBy("node").agg(min(col("dist")).as("dist"))
-        if (i % 3 == 0 || i == hi) dist = dist.barrier(false)
-      }
-      dist.filter(col("node") === dstUid && col("dist") >= lo)
-        .select(col("dist").as(m.group(11)))
-    }
+    checkPathBounds("shortestPath", lo, hi)
+    // `wlength(p)` is the WEIGHTED shortest path: minimum path COST
+    // over the reciprocal-weight edge length 1000000 div weight
+    // (stronger tie → shorter edge — qWeightedShortestPath's exact
+    // cost rule), relaxed by `hi` Bellman-Ford rounds of the same loop
+    // as length(). Neo4j reaches this through GDS Dijkstra; CypherLite
+    // exposes it as wlength() on the shortestPath pattern so "how
+    // STRONGLY are X and Y connected" composes with the r.weight
+    // property ex24 made readable. Only the weighted relationship
+    // supports it.
+    require(!weighted || rel == "CO_OCCURS", s"wlength needs a weighted relationship, not $rel")
+    val (e, len) =
+      if (weighted)
+        (edgesWithProps(spark, dir, rel, None)
+          .selectExpr("src_uid", "dst_uid", "1000000 div weight AS cost"), col("cost"))
+      else (edges(spark, dir, rel, dstLabel), lit(1L))
+    val atDst = col("node") === s"$dstLabel:$dstName"
+    Loops.relaxMin(e.barrier(false), "src_uid", "dst_uid", s"$srcLabel:$srcName",
+        zero = lit(0L), len = len, rounds = hi, every = 3, eager = false)
+      .filter(if (weighted) atDst else atDst && col("dist") >= lo)
+      .select(col("dist").as(m.group(11)))
   }
 
   /** `MATCH p = shortestPath(…) RETURN length(p) AS l, nodes(p) AS
@@ -2635,8 +2623,8 @@ object CypherLite {
     * is its minimal-uid neighbor one BFS layer closer to the seed,
     * and the path walks those predecessors back from the target.
     *
-    * Scale shape: the BFS is the same one-equi-join-per-round
-    * frontier loop as length(); predecessors come from ONE extra
+    * Scale shape: the BFS is the layered frontier loop (bfsFrom — one
+    * equi-join + anti-join per round); predecessors come from ONE extra
     * edge join against the settled distance table (min aggregate —
     * never a path enumeration, deg^hi of which would be the wrong
     * plan anywhere); the walk-back is `hi` 1-row⋈V lookups on the
@@ -2666,15 +2654,16 @@ object CypherLite {
     */
   private def witnessPathArr(spark: SparkSession, e0: DataFrame,
       srcUid: String, dstUid: String, lo: Int, hi: Int): DataFrame = {
+    checkPathBounds("shortestPath", lo, hi)
     val e = e0.barrier(false)
     // Frontier + anti-join BFS (round 10, per the r9 verdict): the
     // previous shape re-unioned and re-aggregated the ENTIRE settled
-    // dist table per round (Σ|settled_i|·deg); distBfs expands only
-    // the newly-reached frontier (Σ|frontier_i|·deg) — for unit-cost
-    // BFS a node's first-reach layer IS its min distance, so the
-    // tables are identical by construction.
-    // (distBfs's result is already checkpointed; the cast is lazy)
-    val dist = distBfs(spark, e, srcUid, hi)
+    // dist table per round (Σ|settled_i|·deg); the layered BFS expands
+    // only the newly-reached frontier (Σ|frontier_i|·deg) — for
+    // unit-cost BFS a node's first-reach layer IS its min distance, so
+    // the tables are identical by construction.
+    // (the BFS result is already checkpointed; the cast is lazy)
+    val dist = bfsFrom(spark, e, srcUid, hi, countPaths = false)
       .select(col("node"), col("dist").cast("long").as("dist"))
     // Canonical predecessor: the minimal-uid neighbor one layer
     // closer. A BFS layer's frontier is exactly the dist=i-1 set, so
@@ -2709,7 +2698,6 @@ object CypherLite {
     val (dstLabel, dstName) = (m.group(7), m.group(8))
     require(m.group(1) == m.group(9) && m.group(1) == m.group(11),
       "length()/nodes() must reference the path variable")
-    require(lo >= 1 && lo <= hi && hi <= 8, s"unsupported shortestPath bounds *$lo..$hi")
     witnessPathOn(spark, edges(spark, dir, rel, dstLabel),
       s"$srcLabel:$srcName", s"$dstLabel:$dstName", lo, hi)
       .select(col("len").as(m.group(10)), col("path").as(m.group(12)))
@@ -2747,7 +2735,6 @@ object CypherLite {
     val (dstLabel, dstName) = (m.group(7), m.group(8))
     require(m.group(1) == m.group(9),
       s"RETURN ${m.group(9)} must reference the path variable ${m.group(1)}")
-    require(lo >= 1 && lo <= hi && hi <= 8, s"unsupported shortestPath bounds *$lo..$hi")
     val wp = witnessPathArr(spark, edges(spark, dir, rel, dstLabel),
         s"$srcLabel:$srcName", s"$dstLabel:$dstName", lo, hi)
       .barrier(false) // ≤1 row; the pair explode + head render read it
@@ -2812,22 +2799,21 @@ object CypherLite {
     val e = e0.selectExpr("src_uid", "dst_uid", "weight",
         "1000000 div weight AS cost")
       .barrier(false)
-    var dist = spark.range(1)
+    val dist0 = spark.range(1)
       .select(lit(srcUid).as("node"), lit(0L).as("dist"),
         lit(null).cast("string").as("pred"), lit(null).cast("long").as("pw"))
-    for (i <- 1 to hi) {
+    val dist = Loops.iterate(dist0, hi, every = 3, eager = false) { dist =>
       val relaxed = dist.join(e, dist("node") === e("src_uid"))
         .select(col("dst_uid").as("node"), (col("dist") + col("cost")).as("dist"),
           dist("node").as("pred"), col("weight").as("pw"))
       // canonical rule: min (cost, pred-uid) — pw rides determined by
       // (pred, node), so the third field never decides; the seed row
       // (0, null, null) always wins its node on the first field
-      dist = dist.unionByName(relaxed)
+      dist.unionByName(relaxed)
         .groupBy("node")
         .agg(min(struct(col("dist"), col("pred"), col("pw"))).as("s"))
         .select(col("node"), col("s.dist").as("dist"),
           col("s.pred").as("pred"), col("s.pw").as("pw"))
-      if (i % 3 == 0 || i == hi) dist = dist.barrier(false)
     }
     var w = dist.filter(col("node") === dstUid && col("dist") > 0L)
       .select(col("dist").as("wcost"), col("node").as("cur"),
@@ -2864,8 +2850,7 @@ object CypherLite {
       m.group(1) == m.group(13),
       "wlength()/nodes()/relationships() must reference the path variable")
     require(rel == "CO_OCCURS", s"wlength needs a weighted relationship, not $rel")
-    require(lo == 1, "wlength supports *1..k bounds only")
-    require(hi >= 1 && hi <= 8, s"unsupported shortestPath bounds *$lo..$hi")
+    checkPathBounds("shortestPath", lo, hi)
     weightedWitnessOn(spark,
       edgesWithProps(spark, dir, rel, None).select("src_uid", "dst_uid", "weight"),
       rel, s"$srcLabel:$srcName", s"$dstLabel:$dstName", hi)
@@ -2894,52 +2879,29 @@ object CypherLite {
       """\(\w+:(\w+)\s*\{name:\s*'([^']*)'\}\)\)\s+""" +
       """RETURN\s+length\((\w+)\)\s+AS\s+(\w+)\s*,\s*count\((\w+)\)\s+AS\s+(\w+)$""").r
 
-  /** Layered path-counting BFS from `seed`: one row per reached node
-    * with its first-reach layer and σ shortest-path count. ONE
-    * implementation shared by the scalar allShortestPaths form and
-    * the witness-set form — their (length, count) pairs must match by
-    * contract, so they must run the same loop.
+  /** Layered BFS from `seed` over a (src_uid, dst_uid) edge table: one
+    * row per node first reached within `hi` hops, with its layer `dist`
+    * and, when `countPaths`, its σ shortest-path count `cnt` (the sum
+    * of its predecessors' counts — the recurrence betweenness uses).
+    * The scalar and witness-set allShortestPaths forms run this one
+    * loop, so their (length, count) pairs match by construction; the
+    * dist-only form skips the per-layer sum and keeps a distinct
+    * frontier.
     */
-  private def countingBfs(spark: SparkSession, e: DataFrame,
-      seed: String, hi: Int): DataFrame = {
-    var frontier = spark.range(1)
-      .select(lit(seed).as("node"), lit(1L).as("cnt"))
-    var reached = frontier.select(col("node"), lit(0).as("dist"), col("cnt"))
-      .barrier(false)
-    for (i <- 1 to hi) {
-      val nxt = frontier.join(e, frontier("node") === e("src_uid"))
-        .groupBy(col("dst_uid").as("node"))
-        .agg(sum(col("cnt")).as("cnt"))
-        .join(reached.select("node"), Seq("node"), "left_anti")
-        .barrier(false) // read by reached AND the next round
-      reached = reached
-        .unionByName(nxt.select(col("node"), lit(i).as("dist"), col("cnt")))
-        .barrier(false)
-      frontier = nxt
-    }
-    reached
-  }
-
-  /** Dist-only BFS (distinct frontier, no σ aggregation) — the
-    * witness-set DAG filter's reverse pass needs only layers, so it
-    * skips the per-layer sum the counting loop pays.
-    */
-  private def distBfs(spark: SparkSession, e: DataFrame,
-      seed: String, hi: Int): DataFrame = {
-    var frontier = spark.range(1).select(lit(seed).as("node"))
-    var reached = frontier.select(col("node"), lit(0).as("dist"))
-      .barrier(false)
-    for (i <- 1 to hi) {
-      val nxt = frontier.join(e, frontier("node") === e("src_uid"))
-        .select(col("dst_uid").as("node")).distinct()
-        .join(reached.select("node"), Seq("node"), "left_anti")
-        .barrier(false)
-      reached = reached
-        .unionByName(nxt.select(col("node"), lit(i).as("dist")))
-        .barrier(false)
-      frontier = nxt
-    }
-    reached
+  private def bfsFrom(spark: SparkSession, e: DataFrame, seed: String, hi: Int,
+      countPaths: Boolean): DataFrame = {
+    val cnt = if (countPaths) Seq(col("cnt")) else Nil
+    val l0 = spark.range(1)
+      .select(lit(seed).as("node") +: (if (countPaths) Seq(lit(1L).as("cnt")) else Nil): _*)
+    val reached0 = l0.select(col("node") +: lit(0).as("dist") +: cnt: _*).barrier(false)
+    Loops.layeredBfs(l0, reached0, Seq("node"), hi)(
+      { frontier =>
+        val hop = frontier.join(e, frontier("node") === e("src_uid"))
+        if (countPaths) hop.groupBy(col("dst_uid").as("node")).agg(sum(col("cnt")).as("cnt"))
+        else hop.select(col("dst_uid").as("node")).distinct()
+      },
+      (layer, i) => layer.select(col("node") +: lit(i).as("dist") +: cnt: _*))
+      .visited.last
   }
 
   private def runAllShortestPaths(spark: SparkSession, dir: String,
@@ -2949,11 +2911,11 @@ object CypherLite {
     val (dstLabel, dstName) = (m.group(7), m.group(8))
     require(m.group(1) == m.group(9) && m.group(1) == m.group(11),
       "length()/count() must reference the path variable")
-    require(lo >= 1 && lo <= hi && hi <= 8, s"unsupported allShortestPaths bounds *$lo..$hi")
+    checkPathBounds("allShortestPaths", lo, hi)
     val e = edges(spark, dir, rel, dstLabel).barrier(false)
     val srcUid = s"$srcLabel:$srcName"
     val dstUid = s"$dstLabel:$dstName"
-    countingBfs(spark, e, srcUid, hi)
+    bfsFrom(spark, e, srcUid, hi, countPaths = true)
       .filter(col("node") === dstUid &&
         col("dist") >= lo && col("dist") <= hi)
       .select(col("dist").cast("long").as(m.group(10)),
@@ -3003,12 +2965,13 @@ object CypherLite {
     */
   private[graft] def aspPathsOn(spark: SparkSession, e0: DataFrame,
       srcUid: String, dstUid: String, lo: Int, hi: Int): DataFrame = {
+    checkPathBounds("allShortestPaths", lo, hi)
     val e = e0.barrier(false)
     // forward: first-reach layer + σ path counts (the SAME loop the
     // scalar form runs — their (length, count) must match by
     // contract); reverse: layers only, the DAG filter needs no counts
-    val fw = countingBfs(spark, e, srcUid, hi)
-    val rv = distBfs(spark, e, dstUid, hi)
+    val fw = bfsFrom(spark, e, srcUid, hi, countPaths = true)
+    val rv = bfsFrom(spark, e, dstUid, hi, countPaths = false)
     // the (L, n_paths) pair — empty when dst is unreachable in hi
     val lrow = fw.filter(col("node") === dstUid &&
         col("dist") >= lo && col("dist") <= hi)
@@ -3056,7 +3019,6 @@ object CypherLite {
     require(m.group(1) == m.group(9) && m.group(1) == m.group(11) &&
       m.group(1) == m.group(13),
       "length()/count()/nodes() must reference the path variable")
-    require(lo >= 1 && lo <= hi && hi <= 8, s"unsupported allShortestPaths bounds *$lo..$hi")
     aspPathsOn(spark, edges(spark, dir, rel, dstLabel),
       s"$srcLabel:$srcName", s"$dstLabel:$dstName", lo, hi)
       .select(col("len").as(m.group(10)), col("n_paths").as(m.group(12)),

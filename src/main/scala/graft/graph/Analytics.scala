@@ -182,20 +182,10 @@ object Analytics {
     val e = edges(spark, dir).select("src", "dst").barrier()
     val deg = e.groupBy("src").agg(count(lit(1)).as("d")).barrier()
     val n = deg.count()
-    var pr = deg.select(col("src").as("node"), lit(1.0 / n).as("rank"))
-    for (i <- 1 to PrIters) {
-      val inc = pr.withColumnRenamed("node", "src")
-        .join(e, "src").join(deg, "src")
-        .select(col("dst").as("node"), (col("rank") / col("d")).as("m"))
-        .groupBy("node").agg(sum(col("m")).as("inc"))
-      pr = deg.select(col("src").as("node"))
-        .join(inc, Seq("node"), "left")
-        .select(col("node"),
-          (lit((1.0 - Damping) / n) + lit(Damping) * coalesce(col("inc"), lit(0.0))).as("rank"))
-      // Truncate lineage every few rounds — every round costs a full
-      // eager job; never truncating costs quadratic re-analysis.
-      if (i % 3 == 0 || i == PrIters) pr = pr.barrier()
-    }
+    val pr = Loops.powerIterate(
+      deg.select(col("src").as("node"), lit(1.0 / n).as("rank")), e, deg,
+      share = col("rank") / col("d"), teleport = lit((1.0 - Damping) / n),
+      damping = Damping, rounds = PrIters, every = 3, eager = true)
     pr.select(col("node").as("name"), round(col("rank"), 6).as("pagerank"))
       .orderBy(col("pagerank").desc, col("name"))
   }
@@ -249,19 +239,18 @@ object Analytics {
     require(kd < 2000000000000L,
       s"q_katz: max weighted degree $kd leaves no BIGINT headroom " +
         s"(need kd·${KatzIters}e6 < 2^63); re-scale edge weights first")
-    var x = e.select(col("src").as("node")).distinct()
+    val x0 = e.select(col("src").as("node")).distinct()
       .withColumn("s", lit(1000000L))
-    for (i <- 1 to KatzIters) {
+    val x = Loops.iterate(x0, KatzIters, every = 2, eager = true) { x =>
       val inc = x.select(col("node").as("src"), col("s"))
         .join(e, "src")
         .groupBy("dst")
         .agg(expr(s"sum(s * weight) div $kd").as("v"))
         .select(col("dst").as("node"), col("v"))
-      x = x.select("node")
+      x.select("node")
         .join(inc, Seq("node"), "left")
         .select(col("node"),
           (lit(1000000L) + coalesce(col("v"), lit(0L))).as("s"))
-      if (i % 2 == 0 || i == KatzIters) x = x.barrier()
     }
     x.select(col("node").as("name"),
         round(col("s") / lit(1e6), 6).as("katz"))
@@ -303,19 +292,10 @@ object Analytics {
     val deg = e.groupBy("src")
       .agg(sum(col("weight")).cast("long").as("wd")).barrier()
     val n = deg.count()
-    var pr = deg.select(col("src").as("node"), lit(1.0 / n).as("rank"))
-    for (i <- 1 to PrIters) {
-      val inc = pr.withColumnRenamed("node", "src")
-        .join(e, "src").join(deg, "src")
-        .select(col("dst").as("node"),
-          (col("rank") * col("weight") / col("wd")).as("m"))
-        .groupBy("node").agg(sum(col("m")).as("inc"))
-      pr = deg.select(col("src").as("node"))
-        .join(inc, Seq("node"), "left")
-        .select(col("node"),
-          (lit((1.0 - Damping) / n) + lit(Damping) * coalesce(col("inc"), lit(0.0))).as("rank"))
-      if (i % 3 == 0 || i == PrIters) pr = pr.barrier()
-    }
+    val pr = Loops.powerIterate(
+      deg.select(col("src").as("node"), lit(1.0 / n).as("rank")), e, deg,
+      share = col("rank") * col("weight") / col("wd"),
+      teleport = lit((1.0 - Damping) / n), damping = Damping, rounds = PrIters, every = 3, eager = true)
     pr.select(col("node").as("name"), round(col("rank"), 6).as("wpagerank"))
       .orderBy(col("wpagerank").desc, col("name"))
   }
@@ -344,17 +324,8 @@ object Analytics {
     */
   def qComponents(spark: SparkSession, dir: String): DataFrame = {
     val e = edges(spark, dir).select("src", "dst").barrier()
-    var lbl = e.select(col("src").as("node")).distinct()
-      .withColumn("comp", col("node"))
-    for (i <- 1 to CcIters) {
-      val nbrMin = lbl.join(e, lbl("node") === e("src"))
-        .groupBy(col("dst").as("node2"))
-        .agg(min(col("comp")).as("nbr_comp"))
-      lbl = lbl.join(nbrMin, lbl("node") === col("node2"), "left")
-        .select(col("node"), least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-      if (i % 3 == 0 || i == CcIters) lbl = lbl.barrier()
-    }
-    lbl.select(col("node").as("name"), col("comp"))
+    Loops.minLabel(e, CcIters, every = 3, eager = true)
+      .select(col("node").as("name"), col("comp"))
       .orderBy("name")
   }
 
@@ -401,10 +372,10 @@ object Analytics {
     val seeds = deg.orderBy(col("d").desc, col("src")).limit(LpaSeeds)
       .select(col("src").as("node"), col("src").as("slbl"))
       .barrier(false) // K rows; read every round as the freeze mask
-    var lbl = e.select(col("src").as("node")).distinct()
+    val lbl0 = e.select(col("src").as("node")).distinct()
       .join(seeds, Seq("node"), "left")
       .select(col("node"), col("slbl").as("lbl"), col("slbl").isNotNull.as("seed"))
-    for (i <- 1 to LpaIters) {
+    val lbl = Loops.iterate(lbl0, LpaIters, every = 2, eager = true) { lbl =>
       val votes = lbl.filter(col("lbl").isNotNull)
         .select(col("node").as("src"), col("lbl"))
         .join(e, "src")
@@ -413,12 +384,11 @@ object Analytics {
       val best = votes.groupBy("node2")
         .agg(min(struct((-col("c")).as("nc"), col("nl").as("l"))).as("b"))
         .select(col("node2").as("node"), col("b.l").as("new_lbl"))
-      lbl = lbl.join(best, Seq("node"), "left")
+      lbl.join(best, Seq("node"), "left")
         .select(col("node"),
           when(col("seed"), col("node"))
             .otherwise(coalesce(col("new_lbl"), col("lbl"))).as("lbl"),
           col("seed"))
-      if (i % 2 == 0 || i == LpaIters) lbl = lbl.barrier()
     }
     lbl.select(col("node"), coalesce(col("lbl"), col("node")).as("community"))
   }
@@ -703,8 +673,7 @@ object Analytics {
       .select(col("src").as("node"), col("k"))
       .barrier(false) // read twice per round
     val totW = e.agg(sum("weight").cast("long").as("tw"))
-    var com = init.barrier(false)
-    for (_ <- 1 to rounds) {
+    Loops.iterate(init.barrier(false), rounds, every = 1, eager = true) { com =>
       val tot = com.join(kdeg, "node")
         .groupBy("community").agg(sum("k").cast("long").as("tot"))
       // weight from each node into each adjacent community
@@ -738,7 +707,7 @@ object Analytics {
           max(when(col("c") === col("community"), col("gain"))).as("sg0"))
         .select(col("node"), col("b.l").as("best_c"),
           (-col("b.ng")).as("best_gain"), col("sg0"))
-      com = com.join(best, Seq("node"), "left")
+      com.join(best, Seq("node"), "left")
         .join(kdeg, "node")
         .join(tot, "community")
         .crossJoin(broadcast(totW))
@@ -747,9 +716,7 @@ object Analytics {
         .select(col("node"),
           when(col("best_gain") > col("stay_gain"), col("best_c"))
             .otherwise(col("community")).as("community"))
-        .barrier()
     }
-    com
   }
 
   /** The same rounds unrolled as CTEs — identical micro-grid floors,
@@ -925,16 +892,9 @@ object Analytics {
     */
   def qShortestPath(spark: SparkSession, dir: String): DataFrame = {
     val e = edges(spark, dir).select("src", "dst").barrier()
-    var dist = e.sparkSession.range(1)
-      .select(lit(BfsSeed).as("node"), lit(0).as("dist"))
-    for (i <- 1 to BfsHops) {
-      val relaxed = dist.join(e, dist("node") === e("src"))
-        .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-      if (i % 3 == 0 || i == BfsHops) dist = dist.barrier()
-    }
-    dist.select(col("node").as("name"), col("dist"))
+    Loops.relaxMin(e, "src", "dst", BfsSeed, zero = lit(0), len = lit(1),
+        rounds = BfsHops, every = 3, eager = true)
+      .select(col("node").as("name"), col("dist"))
       .orderBy("dist", "name")
   }
 
@@ -964,16 +924,9 @@ object Analytics {
     val e = edges(spark, dir)
       .selectExpr("src", "dst", "1000000 div weight AS cost")
       .barrier()
-    var dist = spark.range(1)
-      .select(lit(BfsSeed).as("node"), lit(0L).as("dist"))
-    for (i <- 1 to WspRounds) {
-      val relaxed = dist.join(e, dist("node") === e("src"))
-        .select(col("dst").as("node"), (col("dist") + col("cost")).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-      if (i % 3 == 0 || i == WspRounds) dist = dist.barrier()
-    }
-    dist.select(col("node").as("name"), col("dist").as("wdist"))
+    Loops.relaxMin(e, "src", "dst", BfsSeed, zero = lit(0L), len = col("cost"),
+        rounds = WspRounds, every = 3, eager = true)
+      .select(col("node").as("name"), col("dist").as("wdist"))
       .orderBy("wdist", "name")
   }
 
@@ -992,20 +945,12 @@ object Analytics {
   def qPagerankPersonalized(spark: SparkSession, dir: String): DataFrame = {
     val e = edges(spark, dir).select("src", "dst").barrier()
     val deg = e.groupBy("src").agg(count(lit(1)).as("d")).barrier()
-    val nodes = deg.select(col("src").as("node"))
-    var pr = nodes.withColumn("rank",
-      when(col("node") === BfsSeed, 1.0).otherwise(0.0))
-    for (i <- 1 to PrIters) {
-      val inc = pr.withColumnRenamed("node", "src")
-        .join(e, "src").join(deg, "src")
-        .select(col("dst").as("node"), (col("rank") / col("d")).as("m"))
-        .groupBy("node").agg(sum(col("m")).as("inc"))
-      pr = nodes.join(inc, Seq("node"), "left")
-        .select(col("node"),
-          (when(col("node") === BfsSeed, lit(PprAlpha)).otherwise(lit(0.0))
-            + lit(1.0 - PprAlpha) * coalesce(col("inc"), lit(0.0))).as("rank"))
-      if (i % 3 == 0 || i == PrIters) pr = pr.barrier()
-    }
+    val pr = Loops.powerIterate(
+      deg.select(col("src").as("node"))
+        .withColumn("rank", when(col("node") === BfsSeed, 1.0).otherwise(0.0)),
+      e, deg, share = col("rank") / col("d"),
+      teleport = when(col("node") === BfsSeed, lit(PprAlpha)).otherwise(lit(0.0)),
+      damping = 1.0 - PprAlpha, rounds = PrIters, every = 3, eager = true)
     pr.filter(col("rank") > 0)
       .select(col("node").as("name"), round(col("rank"), 6).as("ppr"))
       .orderBy(col("ppr").desc, col("name"))
@@ -1199,14 +1144,13 @@ object Analytics {
     * edge list only ever shrinks, so later rounds get cheaper.
     */
   def qKcore(spark: SparkSession, dir: String): DataFrame = {
-    var e = edges(spark, dir).select("src", "dst").barrier()
-    for (i <- 1 to KcIters) {
+    val e0 = edges(spark, dir).select("src", "dst").barrier()
+    val e = Loops.iterate(e0, KcIters, every = 2, eager = true) { e =>
       val keep = e.groupBy("src").agg(count(lit(1)).as("d"))
         .filter(col("d") >= KcoreK).select("src")
-      e = e.join(keep, "src")
+      e.join(keep, "src")
         .join(keep.withColumnRenamed("src", "dst"), "dst")
         .select("src", "dst")
-      if (i % 2 == 0 || i == KcIters) e = e.barrier()
     }
     e.groupBy(col("src").as("name")).agg(count(lit(1)).as("core_degree"))
       .orderBy("name")
@@ -1484,19 +1428,13 @@ object Analytics {
       .select(col("src").as("root"))
     val l0 = seeds.select(col("root"), col("root").as("node"), lit(1L).as("sigma"))
       .barrier(false)
-    var layers = Vector(l0)
-    var visited = l0.select("root", "node").barrier(false)
-    for (_ <- 1 to BtwDepth) {
-      val next = layers.last
-        .select(col("root"), col("node").as("src"), col("sigma"))
+    val layers = Loops.layeredBfs(l0, l0.select("root", "node").barrier(false),
+        Seq("root", "node"), BtwDepth)(
+      _.select(col("root"), col("node").as("src"), col("sigma"))
         .join(e, "src")
         .select(col("root"), col("dst").as("node"), col("sigma"))
-        .join(visited, Seq("root", "node"), "left_anti")
-        .groupBy("root", "node").agg(sum("sigma").as("sigma"))
-        .barrier(false)
-      layers :+= next
-      visited = visited.unionByName(next.select("root", "node")).barrier(false)
-    }
+        .groupBy("root", "node").agg(sum("sigma").as("sigma")),
+      (layer, _) => layer.select("root", "node")).layers
     var delta: DataFrame = null
     var parts = Vector.empty[DataFrame]
     for (l <- (BtwDepth - 1) to 1 by -1) {
@@ -1673,6 +1611,21 @@ object Analytics {
       .orderBy("e1", "e2")
   }
 
+  /** Reachability BFS from every root in `seeds` (root) over the edge
+    * list `e` (src, dst): layer l holds the (root, node) pairs first
+    * reached at hop l; the visited set is every pair reached so far.
+    * Shared by qCloseness and qAnf.
+    */
+  private def rootedBfs(e: DataFrame, seeds: DataFrame, hops: Int): Loops.Bfs = {
+    val l0 = seeds.select(col("root"), col("root").as("node")).barrier(false)
+    Loops.layeredBfs(l0, l0, Seq("root", "node"), hops)(
+      _.select(col("root"), col("node").as("src"))
+        .join(e, "src")
+        .select(col("root"), col("dst").as("node"))
+        .distinct(),
+      (layer, _) => layer)
+  }
+
   /** Harmonic closeness centrality from the CloseSeeds highest-degree
     * entities (the exact-for-seeds / sampled-for-the-graph protocol
     * qBetweenness uses): H(root) = Σ_{v reached} 1/d(root,v), with the
@@ -1688,24 +1641,12 @@ object Analytics {
     val seeds = e.groupBy("src").agg(count(lit(1)).as("d"))
       .orderBy(col("d").desc, col("src")).limit(CloseSeeds)
       .select(col("src").as("root"))
-    var visited = seeds.select(col("root"), col("root").as("node"))
-      .barrier(false)
-    var frontier = visited
-    var acc: DataFrame = null
-    for (l <- 1 to CloseDepth) {
-      val next = frontier.select(col("root"), col("node").as("src"))
-        .join(e, "src")
-        .select(col("root"), col("dst").as("node"))
-        .distinct()
-        .join(visited, Seq("root", "node"), "left_anti")
-        .barrier(false)
-      val contrib = next.groupBy("root")
+    val bfs = rootedBfs(e, seeds, CloseDepth)
+    val acc = (1 to CloseDepth).map { l =>
+      bfs.layers(l).groupBy("root")
         .agg((count(lit(1)) * lit(1000000L / l)).as("h"))
-      acc = if (acc == null) contrib else acc.unionByName(contrib)
-      visited = visited.unionByName(next).barrier(false)
-      frontier = next
-    }
-    val reached = visited.groupBy("root")
+    }.reduce(_ unionByName _)
+    val reached = bfs.visited.last.groupBy("root")
       .agg((count(lit(1)) - 1).as("n_reached"))
     reached.join(acc.groupBy("root").agg(sum("h").as("h_micro")),
         Seq("root"), "left")
@@ -1770,24 +1711,11 @@ object Analytics {
       .orderBy(md5(col("src")), col("src")).limit(AnfSeeds)
       .select(col("src").as("root"))
       .barrier(false) // read by the pair init AND the seed count
-    var visited = seeds.select(col("root"), col("root").as("node"))
-      .barrier(false)
-    var frontier = visited
-    var counts = visited.agg(count(lit(1)).as("n_pairs"))
-      .withColumn("hop", lit(0L))
-    for (h <- 1 to AnfHops) {
-      val next = frontier.select(col("root"), col("node").as("src"))
-        .join(e, "src")
-        .select(col("root"), col("dst").as("node"))
-        .distinct()
-        .join(visited, Seq("root", "node"), "left_anti")
-        .barrier(false)
-      visited = visited.unionByName(next).barrier(false)
-      frontier = next
-      counts = counts.unionByName(
-        visited.agg(count(lit(1)).as("n_pairs")).withColumn("hop", lit(h.toLong)))
-    }
-    val last = visited.agg(count(lit(1)).as("n_max"))
+    val visited = rootedBfs(e, seeds, AnfHops).visited
+    val counts = visited.zipWithIndex.map { case (v, h) =>
+      v.agg(count(lit(1)).as("n_pairs")).withColumn("hop", lit(h.toLong))
+    }.reduce(_ unionByName _)
+    val last = visited.last.agg(count(lit(1)).as("n_max"))
     // divide by the ACTUAL pivot count, not the AnfSeeds cap — a graph
     // with fewer than AnfSeeds nodes must still report avg ball = 1.0
     // at hop 0 (both 1-row aggregates broadcast into the 5-row frame)

@@ -819,7 +819,7 @@ object Dedup {
     * min doc_id reachable through verified near-dup pairs, plus the
     * cluster size; keep `doc_id == canonical_id`, drop the rest.
     * Fixed-round min-label propagation over the (pair-sized, not
-    * corpus-sized) edge list — the same checkpointed-join shape as
+    * corpus-sized) edge list — the same Loops.minLabel kernel as
     * Analytics.qComponents; singletons stay their own canonical. The
     * oracle replays the identical rounds, so the output matches even
     * for cluster diameters beyond the round count.
@@ -838,18 +838,7 @@ object Dedup {
     val edges = pairs
       .union(pairs.select(col("doc_id_b").as("doc_id_a"), col("doc_id_a").as("doc_id_b")))
       .toDF("src", "dst")
-    var lbl = edges.select(col("src").as("node")).distinct()
-      .withColumn("comp", col("node"))
-    for (i <- 1 to ClusterIters) {
-      val nbrMin = lbl.join(edges, lbl("node") === edges("src"))
-        .groupBy(col("dst").as("node2"))
-        .agg(min(col("comp")).as("nbr_comp"))
-      lbl = lbl.join(nbrMin, lbl("node") === col("node2"), "left")
-        .select(col("node"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-      if (i % 3 == 0 || i == ClusterIters) lbl = lbl.barrier()
-    }
-    lbl
+    graft.graph.Loops.minLabel(edges, ClusterIters, every = 3, eager = true)
   }
 
   def qDedupClusters(spark: SparkSession, dir: String): DataFrame = {

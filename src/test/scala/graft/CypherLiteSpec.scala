@@ -68,6 +68,29 @@ class CypherLiteSpec extends AnyFunSuite {
     assert(CypherLite.run(spark, TestSpark.sf, q).count() == 0)
   }
 
+  test("path functions refuse a minimal length above 1 instead of returning no row") {
+    // an entity adjacent to the seed: its shortest path has length 1,
+    // so `*2..4` has no answer the min-distance BFS could give
+    val nbr = CypherLite.run(spark, TestSpark.sf,
+      "MATCH (a:Entity {name: 'spark group'})-[:CO_OCCURS]->(b:Entity) " +
+        "RETURN b.name AS name ORDER BY name LIMIT 1").head().getString(0)
+    val pattern = s"(a:Entity {name:'spark group'})-[:CO_OCCURS*2..4]-(b:Entity {name:'$nbr'})"
+    val near = CypherLite.run(spark, TestSpark.sf,
+      s"MATCH p = shortestPath(${pattern.replace("*2..4", "*1..4")}) RETURN length(p) AS len")
+    assert(near.collect().map(_.getLong(0)).toSeq == Seq(1L))
+    Seq(
+      s"MATCH p = shortestPath($pattern) RETURN length(p) AS len",
+      s"MATCH p = shortestPath($pattern) RETURN length(p) AS len, nodes(p) AS path",
+      s"MATCH p = shortestPath($pattern) RETURN p",
+      s"MATCH p = shortestPath($pattern) RETURN wlength(p) AS wcost",
+      s"MATCH p = allShortestPaths($pattern) RETURN length(p) AS len, count(p) AS n",
+      s"MATCH p = allShortestPaths($pattern) " +
+        "RETURN length(p) AS len, count(p) AS n, nodes(p) AS path").foreach { q =>
+      val e = intercept[IllegalArgumentException](CypherLite.run(spark, TestSpark.sf, q).collect())
+      assert(e.getMessage.contains("*2..4") && e.getMessage.contains("hortestPath"), e.getMessage)
+    }
+  }
+
   test("exists pattern semi-join complements the NOT-pattern anti-join") {
     val total = CypherLite.run(spark, TestSpark.sf,
       "MATCH (c:Chunk) RETURN count(c) AS n").head().getLong(0)

@@ -132,6 +132,15 @@ class DirtyDataSpec extends AnyFunSuite {
   runs("q_wsp")(graph.Analytics.qWeightedShortestPath(spark, dir))
   runs("q_node2vec")(graph.Analytics.qNode2vec(spark, dir))
   runs("q_katz")(graph.Analytics.qKatz(spark, dir))
+  runs("q_components")(graph.Analytics.qComponents(spark, dir))
+  runs("q_pagerank_weighted")(graph.Analytics.qPagerankWeighted(spark, dir))
+  runs("q_ppr")(graph.Analytics.qPagerankPersonalized(spark, dir))
+  runs("q_shortest_path")(graph.Analytics.qShortestPath(spark, dir))
+  runs("q_lpa_communities")(graph.Analytics.qLpaCommunities(spark, dir))
+  runs("q_kcore")(graph.Analytics.qKcore(spark, dir))
+  runs("q_closeness")(graph.Analytics.qCloseness(spark, dir))
+  runs("q_betweenness")(graph.Analytics.qBetweenness(spark, dir))
+  runs("q_dedup_clusters")(operators.Dedup.qDedupClusters(spark, dir))
   runs("q_graph_nodes")(graph.NewsGraph.qGraphNodes(spark, dir))
   runs("cypher MATCH over dirty docs")(cypher.CypherLite.run(spark, dir,
     "MATCH (a:Article)-[:CONTAINS]->(c:Chunk) " +

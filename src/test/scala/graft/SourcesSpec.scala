@@ -5,25 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.jobsDuring
 import graft.sources.Catalog
 
 class SourcesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  /** Spark jobs started while `body` runs (listener bus drained after). */
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graft.MemoryRelease.drainListeners(sc)
-    sc.addSparkListener(l)
-    try { body; org.apache.spark.graft.MemoryRelease.drainListeners(sc) }
-    finally sc.removeSparkListener(l)
-    n.get
-  }
 
   test("schema memo: an unchanged table reads without a schema-inference job") {
     Tables.documents(spark, TestSpark.sf)

@@ -18,6 +18,23 @@ object TestSpark {
   }
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Spark jobs started while `body` runs (listener bus drained before
+    * and after, so no earlier job is counted and no late event lost).
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.MemoryRelease.drainListeners(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.graft.MemoryRelease.drainListeners(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
   /** Lowercase-hex md5 — the shared replay of Spark/DuckDB `md5()`
     * used by specs that re-derive hash-ordered seeds or register
     * layouts (one definition, so a hashing-discipline change cannot
