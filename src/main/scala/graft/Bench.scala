@@ -491,25 +491,14 @@ object Bench {
     * each query's scheduling/tail gaps). The segment stays ONE timed
     * block, each query still computes exactly its declared frame with
     * the same count() action, and a failure is rethrown only after
-    * every in-flight job settles (no zombie write/job can pollute the
-    * next timed segment). Pre-change sequential numbers: r12 baseline
-    * runs (plans/r12/bench_base{1,2}.json: w2 59/55, w4 72/77,
+    * every in-flight job settles (Overlap.all: no zombie write/job can
+    * pollute the next timed segment). Pre-change sequential numbers: r12
+    * baseline runs (plans/r12/bench_base{1,2}.json: w2 59/55, w4 72/77,
     * w6 69/32 ds at probe_pr 44).
     */
   private[graft] def countOverlapped(spark: SparkSession, qs: Seq[String],
-      sfDir: String): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(qs.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val fs = qs.map(n => Future {
-        SparkEntry.queries(n)(spark, sfDir).count(): Unit
-      })
-      fs.foreach(f => Await.ready(f, Duration.Inf))
-      fs.foreach(_.value.get.get)
-    } finally pool.shutdown()
-  }
+      sfDir: String): Unit =
+    Overlap.all(qs.map(n => () => SparkEntry.queries(n)(spark, sfDir).count())): Unit
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.Tables
+import graft.{Overlap, Tables}
 import graft.graph.{Loops, NewsGraph, Props}
 import graft.operators.TextPipeline
 
@@ -2336,7 +2336,10 @@ object CypherLite {
     val out = compile(spark, dir, parseOne(suffix.trim), Some((v, "Chunk", bound)))
     require(out.columns.contains("score"),
       "a vector or hybrid CALL's RETURN must carry score through (Neo4jVector reads it)")
-    out.orderBy(col("score").desc +:
+    // the seed holds at most k ≤ 1000 rows and the client receives all
+    // of them: one partition sorted in place, not a range-partitioned
+    // global sort (whose bounds need their own sampling job)
+    out.repartition(1).sortWithinPartitions(col("score").desc +:
       out.columns.filterNot(_ == "score").map(col).toSeq: _*)
   }
 
@@ -2403,37 +2406,54 @@ object CypherLite {
     * Lucene stand-in on document-length properties (same k1/b and
     * formula as q_passage_rank, over the index's node table). Output:
     * (uid, score) — the caller joins the text back for projection, so
-    * document text never rides the aggregation shuffle (the tf stream
-    * is (uid, word-hit) rows only).
+    * document text never rides a shuffle.
     *
-    * Scale shape: corpus stats are one broadcast 1-row aggregate;
-    * the explode filter keeps only query-term postings; the global
-    * cut is TakeOrdered. One scan of the node table feeds stats and
-    * tf off a shared lazy checkpoint.
+    * Two passes over the node table, however many words: one global
+    * aggregate returns the corpus statistics (node count, average
+    * length, each distinct query word's document frequency) as one
+    * driver row; one scan then scores every node as a fixed-order sum
+    * over the words, with those statistics as literals, keeps the nodes
+    * with at least one hit and cuts the global top through TakeOrdered.
+    * No posting stream is exploded, grouped or joined, so the keyword
+    * leg costs the aggregate's two jobs plus the TakeOrdered one.
+    *
+    * Scores are per uid. A Chunk uid is unique by construction (one
+    * chunk per (doc_id, chunk_id) group). Any other label's node table
+    * repeats a uid when its source repeats a key, so its aggregate
+    * counts distinct uids; if a uid does repeat, the scan merges term
+    * frequencies per (uid, length) and sums the scores per uid.
     */
   private[graft] def textIndexTopk(spark: SparkSession, dir: String,
       idx: GraphMeta.FtIndex, words: Seq[String], limit: Int): DataFrame = {
     import graft.operators.Retrieval.{Bm25B, Bm25K1}
+    val qw = words.distinct
+    val tf = qw.indices.map(i => s"tf$i")
+    val toks = split(col(idx.prop), " ")
     val nd = nodes(spark, dir, idx.label)
-      .select(col("uid"), col(idx.prop).as("txt"))
-      .withColumn("dl", size(split(col("txt"), " ")).cast("double"))
-      .barrier(false) // one node scan: stats + tf both read it
-    val stats = nd.agg(count(lit(1)).cast("double").as("n_d"),
-      avg(col("dl")).as("avgdl"))
-    val tf = nd.select(col("uid"), col("dl"),
-        explode(split(col("txt"), " ")).as("word"))
-      .filter(col("word").isin(words.map(lit): _*))
-      .groupBy("uid", "dl", "word").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("word").agg(countDistinct(col("uid")).as("dfreq"))
-    tf.join(broadcast(dfreq), "word")
-      .crossJoin(broadcast(stats))
-      .withColumn("term_score",
-        log((col("n_d") - col("dfreq") + 0.5) / (col("dfreq") + 0.5) + 1.0)
-          * (col("tf") * (Bm25K1 + 1.0)) /
-          (col("tf") + lit(Bm25K1)
-            * (lit(1.0 - Bm25B) + lit(Bm25B) * col("dl") / col("avgdl"))))
-      .groupBy("uid")
-      .agg(round(sum(col("term_score")), 6).as("score"))
+      .select(col("uid") +: size(toks).cast("double").as("dl") +:
+        qw.zip(tf).map { case (w, t) => size(filter(toks, _ === lit(w))).as(t) }: _*)
+    val hit = tf.map(t => col(t) > 0)
+    val keyed = idx.label == "Chunk"
+    val st = nd.agg(count(lit(1)).cast("double"), avg(col("dl")) +:
+        (if (keyed) hit.map(count_if)
+         else hit.map(h => countDistinct(when(h, col("uid")))) :+
+           (count(lit(1)) =!= countDistinct(col("uid")))): _*)
+      .first()
+    val repeats = !keyed && st.getBoolean(2 + qw.size)
+    def term(i: Int): Column = {
+      val df = lit(st.getLong(2 + i))
+      log((lit(st.getDouble(0)) - df + 0.5) / (df + 0.5) + 1.0) *
+        (col(tf(i)) * (Bm25K1 + 1.0)) /
+        (col(tf(i)) + lit(Bm25K1)
+          * (lit(1.0 - Bm25B) + lit(Bm25B) * col("dl") / lit(st.get(1))))
+    }
+    val hits = nd.filter(hit.reduce(_ || _))
+    val tfSums = tf.map(t => sum(t).as(t))
+    val perDl = if (repeats) hits.groupBy("uid", "dl").agg(tfSums.head, tfSums.tail: _*)
+      else hits
+    val scored = perDl.select(col("uid"), qw.indices.map(term).reduce(_ + _).as("s"))
+    val perUid = if (repeats) scored.groupBy("uid").agg(sum("s").as("s")) else scored
+    perUid.select(col("uid"), round(col("s"), 6).as("score"))
       .orderBy(col("score").desc, col("uid"))
       .limit(limit)
   }
@@ -2535,10 +2555,12 @@ object CypherLite {
     val words = ftWords(kwIdx, m.group(5))
     val kwLimit = Option(m.group(6)).map(_.toInt).getOrElse(k)
     val fusedK = m.group(7).toInt
-    val kw = textIndexTopk(spark, dir, kwIdx, words, kwLimit).collect().toSeq
-      .map(r => (r.getString(0), r.getDouble(1)))
-    val fused = fuseLegs(Seq(vectorLeg(spark, dir, k), kw), fusedK)
-    retrievalSuffix(spark, dir, fused, m.group(8), m.group(9))
+    // the legs are independent reads: collect them overlapped
+    val legs = Overlap.all(Seq(
+      () => vectorLeg(spark, dir, k),
+      () => textIndexTopk(spark, dir, kwIdx, words, kwLimit).collect().toSeq
+        .map(r => (r.getString(0), r.getDouble(1)))))
+    retrievalSuffix(spark, dir, fuseLegs(legs, fusedK), m.group(8), m.group(9))
   }
 
   /** Max-score fusion of the hybrid legs, in driver code with the

@@ -10,10 +10,12 @@ import graft.operators.TextPipeline
   * for analytics, bulk queries" half of the north star. Implemented as
   * DataFrame iteration (Pregel-style power iteration) rather than RDD
   * GraphX: each step is a shuffle-on-src join the optimizer can plan,
-  * AQE can re-balance, and the oracle can replay; at cluster scale the
-  * edge table is hash-partitioned on src once and every iteration
-  * reuses that exchange. localCheckpoint() truncates lineage so 10
-  * iterations don't stack 10 plans.
+  * AQE can re-balance, and the oracle can replay. localCheckpoint()
+  * truncates lineage so 10 iterations don't stack 10 plans. A barrier
+  * does not keep partitioning: the checkpointed edges report
+  * UnknownPartitioning, so each barrier segment exchanges them on the
+  * join key again (one edge-sized shuffle per segment, not one per
+  * query).
   */
 object Analytics {
 

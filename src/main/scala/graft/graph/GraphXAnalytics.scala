@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Ckpt.BarrierOps
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -17,10 +18,17 @@ import org.apache.spark.sql.functions._
   */
 object GraphXAnalytics {
 
-  /** Build the GraphX graph from the co-occurrence edge list. */
+  /** Build the GraphX graph from the co-occurrence edge list. The edge
+    * list is read three times (two vertex-id sides, the edge join), so
+    * it passes through an eager barrier: its blocks belong to this
+    * graph alone. A `cache()` here would register the plan with the
+    * session's CacheManager, which then substitutes it into every later
+    * query with the same subplan (every edges-based query) and hides
+    * that query's own edge-build jobs.
+    */
   def graph(spark: SparkSession, dir: String): Graph[String, Long] = {
     val co = Analytics.cooccur(spark, dir)
-      .select("e1", "e2", "weight").cache()
+      .select("e1", "e2", "weight").barrier()
     val verts: RDD[(String, VertexId)] = co
       .select(col("e1").as("n")).union(co.select(col("e2")))
       .distinct().rdd.map(_.getString(0)).zipWithUniqueId()

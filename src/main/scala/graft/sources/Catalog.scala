@@ -4,7 +4,7 @@ import graft.Ckpt.BarrierOps
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Overlap, Tables}
 import graft.operators.{Dedup, TextPipeline}
 
 /** Materialized storage layer: how graft tables are laid out on disk
@@ -65,7 +65,7 @@ object Catalog {
     // frame is only an ingest intermediate — without this it stays
     // pinned in executor storage through the amortized query segment
     // that follows (which reads the bucketed tables, not words)
-    try inParallel(
+    try Overlap.all(Seq(
       () => TextPipeline.chunksOfWords(words)
         .write.mode(SaveMode.Overwrite)
         .bucketBy(Buckets, "doc_id").sortBy("doc_id", "chunk_id")
@@ -73,28 +73,8 @@ object Catalog {
       () => TextPipeline.mentionsOfWords(words)
         .write.mode(SaveMode.Overwrite)
         .bucketBy(Buckets, "doc_id").sortBy("doc_id", "chunk_id")
-        .saveAsTable(mentionsTable))
+        .saveAsTable(mentionsTable))): Unit
     finally words.unpersist(blocking = false): Unit
-  }
-
-  /** Run independent Spark jobs overlapped (guide §2.6): a bounded
-    * pool, ALL side effects awaited before returning — even on
-    * failure — then the first error is rethrown. (A fail-fast
-    * Future.sequence rethrows while sibling saveAsTable chains still
-    * run: the zombie write would pollute the caller's next timed
-    * segment and race any retry's dropManaged/rmTree.) Used by the
-    * materializers, whose table writes form independent chains.
-    */
-  private def inParallel(work: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(work.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val fs = work.map(w => Future(w()))
-      fs.foreach(f => Await.ready(f, Duration.Inf))
-      fs.foreach(_.value.get.get)
-    } finally pool.shutdown()
   }
 
   /** Incremental graph ingest — the materialized-graph counterpart of
@@ -310,7 +290,7 @@ object Catalog {
     // centroid table — the FAISS train-once contract; codes still
     // encode under the just-trained codebook), but no chain waits for
     // an unrelated one's write tail.
-    inParallel(
+    Overlap.all(Seq(
       // the quantized serving twins: int8 codes + 8-byte sign words,
       // per-vector pure encodes (round 8 — q_ann_sq8 / q_ann_binary
       // read these instead of re-encoding the corpus per query)
@@ -345,7 +325,7 @@ object Catalog {
           .write.mode(SaveMode.Overwrite)
           .bucketBy(Buckets, "vec_id").sortBy("vec_id", "m")
           .saveAsTable(codesTable)
-      })
+      })): Unit
     } finally e.unpersist(blocking = false): Unit
   }
 

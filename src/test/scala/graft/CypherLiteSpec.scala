@@ -1523,6 +1523,62 @@ class CypherLiteSpec extends AnyFunSuite {
     }
   }
 
+  // ---------- BM25 keyword top-k: one-scan plan vs the multi-stage twin ----------
+
+  /** A documents-only dir (the TEXT indexes read nothing else). */
+  private def docsDir(docs: Seq[(Long, String)]): String = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val d = java.nio.file.Files.createTempDirectory("graft_bm25").toString
+    spark.createDataFrame(java.util.Arrays.asList(docs.map { case (id, t) =>
+        Row(id, t, "en", "s", if (t == null) 0L else t.length.toLong) }: _*),
+      StructType(Seq(StructField("doc_id", LongType, false), StructField("text", StringType),
+        StructField("lang", StringType), StructField("source", StringType),
+        StructField("n_chars", LongType, false))))
+      .write.parquet(s"$d/documents.parquet")
+    d
+  }
+
+  test("BM25 keyword top-k: the one-scan plan returns the multi-stage plan's rows") {
+    def topk(f: (org.apache.spark.sql.SparkSession, String, GraphMeta.FtIndex, Seq[String], Int) =>
+        org.apache.spark.sql.DataFrame, dir: String, idx: String, words: Seq[String], limit: Int) =
+      f(spark, dir, GraphMeta.ftIndexes(idx), words, limit).collect()
+        .map(r => (r.getString(0), r.getDouble(1))).toSeq
+    // every word of each doc sits in its one chunk and its title
+    val every = docsDir(Seq(1L -> "graph join plans", 2L -> "graph window",
+      3L -> "broadcast graph hints graph", 4L -> "graph"))
+    // DirtyDataSpec's documents: NULL, empty, whitespace-only, unicode,
+    // a repeated word, and two documents with the same text
+    val dirty = docsDir(Seq(1L -> "a perfectly ordinary document about spark clusters",
+      2L -> null, 3L -> "", 4L -> "   ", 5L -> "émoji 🎉 naïve Ωmega ﬃ",
+      6L -> "repeated repeated repeated repeated",
+      7L -> "a perfectly ordinary document about spark clusters"))
+    // a repeated doc_id repeats the Article uid (once with the same
+    // text, once with another); its chunks merge into one uid
+    val repeats = docsDir(Seq(1L -> "graph join plans", 1L -> "graph join plans",
+      2L -> "graph plans", 2L -> "window graph graph", 3L -> "join"))
+    val cases = Seq(
+      TestSpark.sf -> Seq("spark", "join", "fast"),
+      TestSpark.sf -> Seq("spark", "spark", "join", "join"), // duplicate query words
+      TestSpark.sf -> Seq("zebra", "spark"),  // a word absent from the corpus
+      TestSpark.sf -> Seq("zebra"),           // every word absent
+      every -> Seq("graph"),                  // a word in every chunk and title
+      every -> Seq("graph", "join", "window"),
+      dirty -> Seq("repeated", "émoji", "🎉", "ﬃ", "clusters"),
+      dirty -> Seq("spark", "ordinary"),
+      repeats -> Seq("graph", "join", "window"),
+      repeats -> Seq("plans"))
+    var nonEmpty = 0
+    // limit 1000 exceeds every case's match count
+    for ((dir, words) <- cases; idx <- Seq("chunktext", "articletitle"); limit <- Seq(2, 1000)) {
+      val got = topk(CypherLite.textIndexTopk, dir, idx, words, limit)
+      val want = topk(CypherLiteSpec.textIndexTopkStaged, dir, idx, words, limit)
+      assert(got == want, s"$idx $words limit $limit on $dir")
+      if (got.nonEmpty) nonEmpty += 1
+    }
+    assert(nonEmpty >= 30, s"only $nonEmpty cases had a match")
+  }
+
   test("path variables on ordinary MATCH: p ≡ uid composition; length is the hop count") {
     def rows(q: String) = CypherLite.run(spark, TestSpark.sf, q)
       .collect().map(_.toSeq).toSeq
@@ -1967,5 +2023,44 @@ class CypherLiteSpec extends AnyFunSuite {
           "YIELD node, score " +
           "RETURN node.uid AS uid, node.name AS name, labels(node)[0] AS label, score")
     }
+  }
+}
+
+object CypherLiteSpec {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.functions._
+  import graft.Ckpt.BarrierOps
+
+  /** The multi-stage BM25 plan that CypherLite.textIndexTopk replaced,
+    * kept as the executable spec of its per-uid scoring: the query
+    * words' postings exploded from a lazily checkpointed node scan, tf
+    * counted per (uid, length, word), df as distinct uids per word, the
+    * corpus statistics broadcast-joined, term scores summed per uid.
+    */
+  def textIndexTopkStaged(spark: SparkSession, dir: String,
+      idx: CypherLite.GraphMeta.FtIndex, words: Seq[String], limit: Int): DataFrame = {
+    import graft.operators.Retrieval.{Bm25B, Bm25K1}
+    val nd = CypherLite.nodes(spark, dir, idx.label)
+      .select(col("uid"), col(idx.prop).as("txt"))
+      .withColumn("dl", size(split(col("txt"), " ")).cast("double"))
+      .barrier(false)
+    val stats = nd.agg(count(lit(1)).cast("double").as("n_d"),
+      avg(col("dl")).as("avgdl"))
+    val tf = nd.select(col("uid"), col("dl"),
+        explode(split(col("txt"), " ")).as("word"))
+      .filter(col("word").isin(words.map(lit): _*))
+      .groupBy("uid", "dl", "word").agg(count(lit(1)).as("tf"))
+    val dfreq = tf.groupBy("word").agg(countDistinct(col("uid")).as("dfreq"))
+    tf.join(broadcast(dfreq), "word")
+      .crossJoin(broadcast(stats))
+      .withColumn("term_score",
+        log((col("n_d") - col("dfreq") + 0.5) / (col("dfreq") + 0.5) + 1.0)
+          * (col("tf") * (Bm25K1 + 1.0)) /
+          (col("tf") + lit(Bm25K1)
+            * (lit(1.0 - Bm25B) + lit(Bm25B) * col("dl") / col("avgdl"))))
+      .groupBy("uid")
+      .agg(round(sum(col("term_score")), 6).as("score"))
+      .orderBy(col("score").desc, col("uid"))
+      .limit(limit)
   }
 }

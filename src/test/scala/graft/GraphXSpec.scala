@@ -183,4 +183,21 @@ class GraphXSpec extends AnyFunSuite {
     assert(got == want,
       s"DataFrame ANF $got != Pregel landmark counts $want")
   }
+
+  test("GraphX entry points leave no plan in the session cache") {
+    // a plan left in the CacheManager is substituted into every later
+    // query with the same subplan (every edges-based query) and hides
+    // that query's own build jobs
+    spark.catalog.clearCache()
+    val seed = Analytics.BfsSeed
+    GraphXAnalytics.pagerank(spark, TestSpark.sf).collect()
+    GraphXAnalytics.components(spark, TestSpark.sf).collect()
+    GraphXAnalytics.personalizedPagerank(spark, TestSpark.sf, seed).collect()
+    GraphXAnalytics.shortestPaths(spark, TestSpark.sf, seed).collect()
+    GraphXAnalytics.weightedShortestPaths(spark, TestSpark.sf, seed, 2).collect()
+    GraphXAnalytics.triangles(spark, TestSpark.sf).collect()
+    GraphXAnalytics.assortativity(spark, TestSpark.sf).collect()
+    GraphXAnalytics.anfCounts(spark, TestSpark.sf, Seq(seed), 2)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }

@@ -10,7 +10,10 @@ import graft.TestSpark.jobsDuring
   * and while it is collected (lazy barriers, the final plan). These
   * queries are job-count bound at bench scale, so a loop refactor that
   * moves a barrier, flips its eagerness or adds a pass must show up
-  * here as a changed count, not only as a slower benchmark.
+  * here as a changed count, not only as a slower benchmark. The
+  * serving loop's vector and hybrid CALLs and their BM25 keyword leg
+  * are pinned the same way: on a small corpus their latency is their
+  * fixed Spark work.
   *
   * Each query runs once unmeasured first, so one-off session work
   * (parquet schema inference, codegen) never lands in the pinned
@@ -37,19 +40,33 @@ class LoopJobsSpec extends AnyFunSuite {
     ("q_anf", 20, 9),
     ("q_cypher_sp", 10, 1),
     ("q_cypher_wpath", 15, 6),
-    ("q_cypher_asp", 18, 1))
+    ("q_cypher_asp", 18, 1),
+    ("q_cypher_vector", 2, 10),
+    ("q_cypher_hybrid", 7, 10))
+
+  /** Jobs while `q()` builds its frame and while it is collected, after
+    * one unmeasured run.
+    */
+  private def jobs(q: () => DataFrame): (Int, Int) = {
+    q().collect()
+    var df: DataFrame = null
+    val b = jobsDuring { df = q() }
+    (b, jobsDuring { df.collect() })
+  }
 
   for ((key, build, collect) <- pinned)
     test(s"$key fires $build jobs while built and $collect while collected") {
-      // a plan cached by another suite (GraphXAnalytics caches the
-      // co-occurrence edges and never releases them) would be
-      // substituted into these queries and hide its jobs
-      spark.catalog.clearCache()
-      val q = SparkEntry.queries(key)
-      q(spark, TestSpark.sf).collect()
-      var df: DataFrame = null
-      val b = jobsDuring { df = q(spark, TestSpark.sf) }
-      val c = jobsDuring { df.collect() }
-      assert((b, c) == ((build, collect)), s"$key: built $b, collected $c")
+      val got = jobs(() => SparkEntry.queries(key)(spark, TestSpark.sf))
+      assert(got == ((build, collect)), s"$key: built ${got._1}, collected ${got._2}")
     }
+
+  test("the BM25 keyword leg fires 3 jobs while built and 2 while collected") {
+    // the statistics aggregate while built (2 jobs), the TakeOrdered
+    // scan while collected (1); chunks derived from the documents, not
+    // read from the standing tables, add one exchange to each
+    val idx = cypher.CypherLite.GraphMeta.ftIndexes("chunktext")
+    val got = jobs(() => cypher.CypherLite.textIndexTopk(spark, TestSpark.sf, idx,
+      Seq("spark", "join", "fast"), 5))
+    assert(got == ((3, 2)), s"textIndexTopk: built ${got._1}, collected ${got._2}")
+  }
 }
