@@ -42,24 +42,14 @@ object Verify {
           System.err.println(s"[verify] PRE-FLIGHT: table $t unreadable: ${e.getMessage}")
       }
     }
-    // On failure the query's output dir gets an _ERROR marker file: the
-    // driver's parquet read of that dir then fails and records a RED
-    // row for the key — round 5 showed that writing nothing makes the
-    // key vanish from the correctness file entirely (absence read as
-    // "not declared", 152 -> 143 silently).
-    def marker(name: String, msg: String): Unit = {
-      try {
-        new java.io.File(s"$outDir/$name").mkdirs()
-        Files.writeString(Paths.get(s"$outDir/$name/_ERROR"), msg)
-      } catch { case _: Throwable => () }
-    }
+    def marker(name: String, msg: String): Unit = writeMarker(outDir, name, msg)
     val failures = scala.collection.mutable.ListBuffer.empty[String]
+    val selected = SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.forall(_.contains(name)) }
     // same deterministic checkpoint release as Bench: localCheckpoint
     // blocks from earlier queries otherwise pile up across ~120
     // queries (the ContextCleaner only frees them after GC)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    for (((name, fn), i) <- selected.zipWithIndex) {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       // Stage-then-rename: cancelJobGroup is ASYNCHRONOUS, so a
       // timed-out query's write could otherwise commit parquet into
@@ -93,6 +83,15 @@ object Verify {
           System.err.println(s"[verify] $name TIMED OUT after ${timeoutSec}s")
           failures += name
           marker(name, s"TIMEOUT after ${timeoutSec}s")
+          // a deadlocked scheduler hangs every later key too: stop here
+          deadlockExit(outDir, name, selected.drop(i + 1).map(_._1), () => deadlockReport())
+            .foreach { code =>
+              writeOracleSql(outDir)
+              System.err.flush()
+              // halt, not exit: the shutdown hook's SparkContext.stop
+              // would wait on the deadlocked scheduler
+              Runtime.getRuntime.halt(code)
+            }
         case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           failures += name
@@ -101,6 +100,53 @@ object Verify {
     }
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} queries FAILED: ${failures.mkString(", ")}")
+    writeOracleSql(outDir)
+    spark.stop()
+  }
+
+  /** A failed key's output dir gets an _ERROR marker file: the
+    * oracle compare's parquet read of that dir then fails and records
+    * a RED row for the key — writing nothing makes the key vanish from
+    * the correctness file entirely (absence read as "not declared",
+    * 152 -> 143 keys silently).
+    */
+  private[graft] def writeMarker(outDir: String, name: String, msg: String): Unit =
+    try {
+      new java.io.File(s"$outDir/$name").mkdirs()
+      Files.writeString(Paths.get(s"$outDir/$name/_ERROR"), msg)
+    } catch { case _: Throwable => () }
+
+  /** Exit status of a run stopped by a deadlocked scheduler. */
+  private[graft] val DeadlockExit = 3
+
+  /** After `key` timed out: when `detect` reports a Java-level deadlock
+    * (the Spark scheduler stuck on a lock cycle, which no job-group
+    * cancel can free, so every later key would hang as well), print
+    * the cycle, mark every key in `remaining` as not run and return
+    * the exit status. None when no thread is deadlocked: the key was
+    * only slow, and the remaining keys still run.
+    */
+  private[graft] def deadlockExit(outDir: String, key: String, remaining: Seq[String],
+      detect: () => Option[String]): Option[Int] =
+    detect().map { cycle =>
+      System.err.println(s"[verify] scheduler deadlocked during $key; " +
+        s"${remaining.size} keys not run. Deadlocked threads:\n$cycle")
+      remaining.foreach(writeMarker(outDir, _, s"not run: scheduler deadlocked during $key"))
+      DeadlockExit
+    }
+
+  /** The JVM's deadlocked threads, each with the lock it waits for and
+    * its holder, its top frames and the locks it holds; None when no
+    * thread is deadlocked.
+    */
+  private[graft] def deadlockReport(): Option[String] = {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+    Option(mx.findDeadlockedThreads()).map(ids =>
+      mx.getThreadInfo(ids, true, true).filter(_ != null).map(_.toString).mkString("\n"))
+  }
+
+  /** oracle_sql.json: every key's DuckDB oracle SQL, for the compare. */
+  private def writeOracleSql(outDir: String): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -116,6 +162,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -158,7 +158,15 @@ import graft.operators.TextPipeline
   * reference); this module is the engine that executes it. Each edge
   * hop is an equi-join on uid keys — Catalyst broadcasts the tiny
   * entity side and reorders freely, which is exactly why the graph is
-  * stored relationally.
+  * stored relationally. A variable the hop reaches then joins its node
+  * table, unless that join cannot change the result; it binds from
+  * the edge row (uid, plus the properties that are functions of its
+  * key) when (1) its label is the hop's fixed endpoint label, (2) that
+  * label's node table is unique per uid and holds every endpoint its
+  * edges emit, and (3) every property the query reads of it derives
+  * from the key (or, for Chunk, none is read). Article always joins: a
+  * repeated doc_id repeats its uid, and the join keeps that
+  * multiplicity. See GraphMeta.rowProps and compile's rowBound.
   */
 object CypherLite {
 
@@ -188,70 +196,86 @@ object CypherLite {
     case "Source" =>
       // graph.py:74: Source carries name + type + url — without them
       // an LLM-written `WHERE s.type = 'news_map'` / `RETURN s.url`
-      // cannot run; derived via Props like Article's
-      Tables.documents(spark, dir).select(col("source")).distinct()
-        .select(concat(lit("Source:"), col("source")).as("uid"),
-          col("source").as("name"),
-          Props.sourceType(col("source")).as("type"),
-          Props.sourceUrl(col("source")).as("url"))
+      // cannot run; derived from the name via GraphMeta.rowProps
+      keyNodes(label, Tables.documents(spark, dir).select(col("source")))
     case "Person" =>
       // gazetteer persons ∪ author-persons (publisher fallback,
       // crawler.py:44) — both carry the Person label in the reference
-      TextPipeline.mentions(spark, dir)
+      keyNodes(label, TextPipeline.mentions(spark, dir)
         .filter(col("label") === "person").select(col("name"))
-        .union(Tables.documents(spark, dir).select(col("source")))
-        .distinct()
-        .select(concat(lit("Person:"), col("name")).as("uid"), col("name"))
+        .union(Tables.documents(spark, dir).select(col("source"))))
     case "Organization" | "Location" =>
-      val want = label.toLowerCase
-      TextPipeline.mentions(spark, dir)
-        .filter(col("label") === want)
-        .select(col("name")).distinct()
-        .select(concat(lit(label), lit(":"), col("name")).as("uid"), col("name"))
+      keyNodes(label, TextPipeline.mentions(spark, dir)
+        .filter(col("label") === label.toLowerCase).select(col("name")))
     case "Topic" =>
-      NewsGraph.qArticleTopics(spark, dir).select(col("topic")).distinct()
-        .select(concat(lit("Topic:"), col("topic")).as("uid"),
-          col("topic").as("name"))
+      keyNodes(label, NewsGraph.qArticleTopics(spark, dir).select(col("topic")))
     case "Entity" =>
       // label-agnostic entity view — the node set of the CO_OCCURS graph
-      TextPipeline.mentions(spark, dir).select(col("name")).distinct()
-        .select(concat(lit("Entity:"), col("name")).as("uid"), col("name"))
+      keyNodes(label, TextPipeline.mentions(spark, dir).select(col("name")))
     case other => throw new IllegalArgumentException(s"unknown node label $other")
+  }
+
+  /** The node table of a label whose properties all derive from its
+    * key: one row per distinct key (the one column of `keys`), its
+    * uid `<label>:<key>` and GraphMeta.rowProps' properties.
+    */
+  private def keyNodes(label: String, keys: DataFrame): DataFrame = {
+    val k = col(keys.columns.head)
+    keys.distinct().select(concat(lit(s"$label:"), k).as("uid") +:
+      GraphMeta.rowProps(label).map { case (p, f) => f(k).as(p) }: _*)
   }
 
   /** Edge table for a relationship type: (src_uid, dst_uid).
     * dstLabel disambiguates MENTIONS (entity label in the uid).
     */
-  def edges(spark: SparkSession, dir: String, rel: String, dstLabel: String): DataFrame = rel match {
+  def edges(spark: SparkSession, dir: String, rel: String, dstLabel: String): DataFrame =
+    keyedEdges(spark, dir, rel, dstLabel).select("src_uid", "dst_uid")
+
+  /** edges() plus the raw key of each endpoint whose label derives
+    * properties from it (GraphMeta.rowProps) — `src_key` / `dst_key`,
+    * the value after the uid's `<label>:` prefix. A hop that binds an
+    * endpoint from its edge row reads those properties off the key
+    * column, so a filter on them still reaches the scan.
+    */
+  private def keyedEdges(spark: SparkSession, dir: String, rel: String,
+      dstLabel: String): DataFrame = rel match {
     case "CONTAINS" =>
       TextPipeline.chunks(spark, dir).select(
         concat(lit("Article:"), col("doc_id")).as("src_uid"),
         concat(lit("Chunk:"), col("doc_id"), lit(":"), col("chunk_id")).as("dst_uid"))
     case "MENTIONS" =>
+      // deduplicated on the name, not the uid: the uid is the name
+      // under a fixed prefix, and the name is the shorter key
       TextPipeline.mentions(spark, dir)
         .filter(col("label") === dstLabel.toLowerCase)
         .select(
           concat(lit("Chunk:"), col("doc_id"), lit(":"), col("chunk_id")).as("src_uid"),
-          concat(lit(dstLabel), lit(":"), col("name")).as("dst_uid"))
+          col("name").as("dst_key"))
         .distinct()
+        .select(col("src_uid"), concat(lit(s"$dstLabel:"), col("dst_key")).as("dst_uid"),
+          col("dst_key"))
     case "PUBLISHED" =>
       Tables.documents(spark, dir).select(
         concat(lit("Source:"), col("source")).as("src_uid"),
-        concat(lit("Article:"), col("doc_id")).as("dst_uid"))
+        concat(lit("Article:"), col("doc_id")).as("dst_uid"),
+        col("source").as("src_key"))
     case "AUTHORED" =>
       Tables.documents(spark, dir).select(
         concat(lit("Person:"), col("source")).as("src_uid"),
-        concat(lit("Article:"), col("doc_id")).as("dst_uid"))
+        concat(lit("Article:"), col("doc_id")).as("dst_uid"),
+        col("source").as("src_key"))
     case "HAS_TOPIC" =>
       NewsGraph.qArticleTopics(spark, dir).select(
         concat(lit("Article:"), col("doc_id")).as("src_uid"),
-        concat(lit("Topic:"), col("topic")).as("dst_uid"))
+        concat(lit("Topic:"), col("topic")).as("dst_uid"),
+        col("topic").as("dst_key"))
     case "CO_OCCURS" =>
       // undirected co-mention graph (Analytics.cooccur), stored as the
       // both-direction edge list so `->` traversal is undirected
       graft.graph.Analytics.edges(spark, dir).select(
         concat(lit("Entity:"), col("src")).as("src_uid"),
-        concat(lit("Entity:"), col("dst")).as("dst_uid"))
+        concat(lit("Entity:"), col("dst")).as("dst_uid"),
+        col("src").as("src_key"), col("dst").as("dst_key"))
     case other => throw new IllegalArgumentException(s"unknown relationship $other")
   }
 
@@ -266,6 +290,7 @@ object CypherLite {
     *   - CO_OCCURS: weight (co-mention count, Analytics.cooccur) —
     *     "how strongly are X and Y connected".
     * Every other type carries just the tag (type(r) stays readable).
+    * Endpoint key columns ride as in keyedEdges.
     */
   def edgesWithProps(spark: SparkSession, dir: String, rel: String,
       dstLabel: Option[String]): DataFrame = rel match {
@@ -281,15 +306,17 @@ object CypherLite {
         .select(
           concat(lit("Chunk:"), col("doc_id"), lit(":"), col("chunk_id")).as("src_uid"),
           concat(lit(lbl), lit(":"), col("name")).as("dst_uid"),
+          col("name").as("dst_key"),
           lit("MENTIONS").as("type"),
           col("start_pos"), col("n_tokens"), col("n_mentions"))
     case "CO_OCCURS" =>
       graft.graph.Analytics.edges(spark, dir).select(
         concat(lit("Entity:"), col("src")).as("src_uid"),
         concat(lit("Entity:"), col("dst")).as("dst_uid"),
+        col("src").as("src_key"), col("dst").as("dst_key"),
         lit("CO_OCCURS").as("type"), col("weight"))
     case other =>
-      edges(spark, dir, other, dstLabel.getOrElse(""))
+      keyedEdges(spark, dir, other, dstLabel.getOrElse(""))
         .withColumn("type", lit(other))
   }
 
@@ -346,27 +373,31 @@ object CypherLite {
     // no extra job.
     val e0c = if (hi >= 2) e0.barrier() else e0.barrier(false)
     val e0s = seed.fold(e0c)(s => e0c.join(s, Seq("src_uid"), "left_semi"))
+    // the far end's columns (dst_uid, and dst_key when the hop binds
+    // its far end from the edge row) ride every leg as m2_* midpoints
+    val far = e0.columns.filter(_.startsWith("dst_")).toSeq
+    def farAt(from: String, to: String) =
+      far.map(c => col(c.replaceFirst("dst_", from)).as(c.replaceFirst("dst_", to)))
     // the 2-hop frame (midpoint retained) is shared by legs 2 and 3 —
     // lazy val, so *1..1 never builds it; eager ONLY when both legs
     // actually read it (lo ≤ 2 AND hi = 3 — for *3..3 leg 3 is the
     // sole consumer and eagerness would pay an extra job for nothing),
     // same shared-branch rule as e0c
     lazy val hop2 = e0s.select(col("src_uid"), col("dst_uid").as("m1_uid"))
-      .join(e0c.select(col("src_uid").as("m1_uid"),
-        col("dst_uid").as("m2_uid")), "m1_uid")
+      .join(e0c.select(col("src_uid").as("m1_uid") +: farAt("dst_", "m2_"): _*), "m1_uid")
       .filter(col("m2_uid") =!= col("src_uid"))
       .barrier(lo <= 2 && hi == 3)
     val legs = (lo to hi).map {
       case 1 => e0s
-      case 2 => hop2.select(col("src_uid"), col("m2_uid").as("dst_uid"))
+      case 2 => hop2.select(col("src_uid") +: farAt("m2_", "dst_"): _*)
       // length-3 relationship-uniqueness (Cypher: a rel may not repeat
       // in a path) reduces to two inequalities because the edge table
       // carries no self-loops: e2≠e1 ⇔ m2≠src, e3≠e2 ⇔ dst≠m1, and
       // e3=e1 would force m2=src (already excluded)
       case 3 => hop2
-        .join(e0c.select(col("src_uid").as("m2_uid"), col("dst_uid")), "m2_uid")
+        .join(e0c.select(col("src_uid").as("m2_uid") +: far.map(col): _*), "m2_uid")
         .filter(col("dst_uid") =!= col("m1_uid"))
-        .select("src_uid", "dst_uid")
+        .select(("src_uid" +: far).map(col): _*)
     }
     legs.reduce(_ unionByName _)
   }
@@ -1488,6 +1519,31 @@ object CypherLite {
       "HAS_TOPIC" -> ("Article", "Topic"),
       "CO_OCCURS" -> ("Entity", "Entity"))
 
+    /** The fixed (src, dst) labels of a hop of type `rel`: edgeEnds, or
+      * for MENTIONS the Chunk source and the written destination label.
+      */
+    def hopEnds(rel: String, dstLabel: Option[String]): Option[(String, String)] =
+      if (rel == "MENTIONS") dstLabel.map("Chunk" -> _) else edgeEnds.get(rel)
+
+    /** The labels whose node table is unique per uid and holds every
+      * endpoint their edges emit, each with the properties that are
+      * functions of the uid's key (the value after `<label>:`). A
+      * variable of such a label, reached by a hop whose fixed endpoint
+      * label it carries, binds from the edge row when the query reads
+      * no other property of it (CypherLite.compile). Chunk derives no
+      * property, so it binds that way only when none is read. Article
+      * is absent: a repeated doc_id repeats its uid, and the node
+      * join's row multiplicity must survive.
+      */
+    val rowProps: Map[String, Seq[(String, Column => Column)]] = {
+      val name = Seq("name" -> ((k: Column) => k))
+      Map(
+        "Source" -> (name ++ Seq("type" -> Props.sourceType _, "url" -> Props.sourceUrl _)),
+        "Person" -> name, "Organization" -> name, "Location" -> name,
+        "Topic" -> name, "Entity" -> name,
+        "Chunk" -> Nil)
+    }
+
     /** Date-carrying string properties — the ONLY ones
       * date()/datetime() may wrap (see unwrapTemporal; a WHITELIST,
       * not a name heuristic — r9 advice). publishing_date is the one
@@ -1530,33 +1586,34 @@ object CypherLite {
     * ONLY by uid (or not at all) keeps its cheap uid-only edge-column
     * binding, so no pre-round-10 plan changes shape.
     */
-  private def propVars(q: Query): Set[String] = {
-    def fromPred(p: Pred): Seq[String] = p match {
-      case InPred(v, pr, _) if pr != "uid" => Seq(v)
-      case EqPred(v, pr, _) if pr != "uid" => Seq(v)
-      case EqColPred(v, pr, _) if pr != "uid" => Seq(v)
-      case NeqPred(v, pr, _) if pr != "uid" => Seq(v)
-      case StrPred(v, pr, _, _) if pr != "uid" => Seq(v)
-      case LowerPred(v, pr, _, _) if pr != "uid" => Seq(v)
-      case RegexPred(v, pr, _) if pr != "uid" => Seq(v)
-      case StrCmpPred(v, pr, _, _) if pr != "uid" => Seq(v)
-      case NumPred(v, pr, _, _) if pr != "uid" => Seq(v)
-      case IsNullPred(v, pr, _) if pr.exists(_ != "uid") => Seq(v)
+  private def propVars(q: Query): Set[String] = propReads(q).map(_._1)
+
+  /** The (variable, property) pairs the query reads, uid excluded. */
+  private def propReads(q: Query): Set[(String, String)] = {
+    def fromPred(p: Pred): Seq[(String, String)] = p match {
+      case InPred(v, pr, _) => Seq(v -> pr)
+      case EqPred(v, pr, _) => Seq(v -> pr)
+      case EqColPred(v, pr, _) => Seq(v -> pr)
+      case NeqPred(v, pr, _) => Seq(v -> pr)
+      case StrPred(v, pr, _, _) => Seq(v -> pr)
+      case LowerPred(v, pr, _, _) => Seq(v -> pr)
+      case RegexPred(v, pr, _) => Seq(v -> pr)
+      case StrCmpPred(v, pr, _, _) => Seq(v -> pr)
+      case NumPred(v, pr, _, _) => Seq(v -> pr)
+      case IsNullPred(v, pr, _) => pr.map(v -> _).toSeq
       case OrPred(ps) => ps.flatMap(fromPred)
       case NotPred(p0) => fromPred(p0)
       case _ => Nil
     }
-    def fromItem(it: RetItem): Seq[String] = it match {
-      case PropItem(v, p, _) if p != "uid" => Seq(v)
-      case MapItem(_, entries, _) =>
-        entries.collect { case (_, (w, p)) if p != "uid" => w }
-      case ConcatItem(parts, _) =>
-        parts.collect { case Right((w, p)) if p != "uid" => w }
-      case CountItem(v, _, _, Some(p)) if p != "uid" => Seq(v)
-      case CollectItem(v, Some(p), _, _) if p != "uid" => Seq(v)
-      case SumItem(v, Some(p), _) if p != "uid" => Seq(v)
-      case AggFnItem(_, v, Some(p), _) if p != "uid" => Seq(v)
-      case CoalesceItem(v, p, _, _) if p != "uid" => Seq(v)
+    def fromItem(it: RetItem): Seq[(String, String)] = it match {
+      case PropItem(v, p, _) => Seq(v -> p)
+      case MapItem(_, entries, _) => entries.map(_._2).toSeq
+      case ConcatItem(parts, _) => parts.collect { case Right(wp) => wp }
+      case CountItem(v, _, _, Some(p)) => Seq(v -> p)
+      case CollectItem(v, Some(p), _, _) => Seq(v -> p)
+      case SumItem(v, Some(p), _) => Seq(v -> p)
+      case AggFnItem(_, v, Some(p), _) => Seq(v -> p)
+      case CoalesceItem(v, p, _, _) => Seq(v -> p)
       case CaseItem(whens, _, _, _) => whens.flatMap(w => fromPred(w._1))
       case _ => Nil
     }
@@ -1570,14 +1627,16 @@ object CypherLite {
       case _ => Nil
     }
     ((q.where ++ stagePreds).flatMap(fromPred) ++
-      (q.ret ++ stageItems ++ q.orderBy.map(_._1)).flatMap(fromItem)).toSet
+      (q.ret ++ stageItems ++ q.orderBy.map(_._1)).flatMap(fromItem))
+      .filter(_._2 != "uid").toSet
   }
 
   /** Compile one parsed query to a DataFrame plan. Node columns are
     * prefixed `<var>_`; each hop joins the edge table then the next
-    * node table. Comma-patterns extend the same join pipeline through
-    * their shared variables (each hop must touch an already-bound
-    * variable — no cartesian pattern products).
+    * node table, or binds the next variable from the edge row where
+    * the node join adds nothing (rowBound). Comma-patterns extend the
+    * same join pipeline through their shared variables (each hop must
+    * touch an already-bound variable — no cartesian pattern products).
     */
   def compile(spark: SparkSession, dir: String, q: Query): DataFrame =
     compile(spark, dir, q, None)
@@ -1703,6 +1762,25 @@ object CypherLite {
           s"(a path binds a LIST of relationships): ${projected.mkString(", ")} " +
           "— filter with r.prop in WHERE instead")
     }
+    /** Bind `v` by joining its node table (with its inline `{prop:…}`
+      * filter applied at the scan), or uid-only when it is labeled
+      * nowhere. A variable reached by a hop skips this join and binds
+      * from the edge row — its uid, and its key-derived properties off
+      * the edge's raw key column — when the join cannot change the
+      * result (rowBound):
+      *   1. its written or inferred label is the hop's fixed endpoint
+      *      label (GraphMeta.hopEnds), so a wrong label still joins
+      *      and still returns no row;
+      *   2. that label's node table is unique per uid and holds every
+      *      endpoint its edges emit (GraphMeta.rowProps), so the join
+      *      neither drops nor repeats a row — except NULL uids, which
+      *      the edge-row bind filters out as the inner join did;
+      *   3. every property the query reads of it derives from the key
+      *      (Source name/type/url, the entity and Topic names), or it
+      *      is a Chunk and no Chunk property is read.
+      * Article always joins: a repeated doc_id repeats its uid, and
+      * the join's row multiplicity must survive.
+      */
     def bind(v: String, joinType: String = "inner"): Unit = if (!bound.contains(v)) {
       if (df != null && !labelOf.contains(v) && !inlineOf.contains(v)) {
         // uid-only variable (`(x)` labeled nowhere): its rows come
@@ -1717,14 +1795,44 @@ object CypherLite {
         bound += v
       }
     }
+    val reads: Map[String, Set[String]] = propReads(q).groupMap(_._1)(_._2)
+    /** The endpoints of hop `rp` (src → dst) that bind from its edge
+      * row under bind's three rules, as (side, variable) with side
+      * "src" or "dst". Only a new variable without an inline filter
+      * qualifies; multi-type hops keep every join; a var-length hop
+      * binds only its far end this way, and only with no zero-length
+      * leg (that leg's row is the seed's, not an edge's).
+      */
+    def rowBound(rp: RelPat, srcV: String, dstV: String): Seq[(String, String)] =
+      if (rp.types.size != 1 || srcV == dstV) Nil
+      else GraphMeta.hopEnds(rp.types.head, labelOf.get(dstV)).toSeq.flatMap {
+        case (srcL, dstL) => Seq(("src", srcV, srcL), ("dst", dstV, dstL)).collect {
+          case (side, v, l) if !bound.contains(v) && !inlineOf.contains(v) &&
+              labelOf.get(v).contains(l) &&
+              GraphMeta.rowProps.get(l).exists(p =>
+                reads.getOrElse(v, Set.empty).subsetOf(p.map(_._1).toSet)) &&
+              rp.varLen.forall { case (lo, _) => side == "dst" && lo >= 1 } =>
+            side -> v
+        }
+      }
     /** Walk a pattern list, joining each hop. outer=true (OPTIONAL
       * MATCH): edge and node joins are left_outer, so unmatched rows
       * survive with NULL uids/props — Cypher's optional semantics.
+      * A first path whose head binds from its first hop's edge row
+      * (rowBound) starts the frame at that edge table.
       */
     def processPaths(pathSeq: Seq[PathPat], outer: Boolean): Unit = {
       val joinType = if (outer) "left_outer" else "inner"
+      // forward: here -R-> next; reversed: next -R-> here
+      def hopVars(path: PathPat, i: Int): (String, String) =
+        if (path.rels(i).reversed) (path.nodes(i + 1).v, path.nodes(i).v)
+        else (path.nodes(i).v, path.nodes(i + 1).v)
       pathSeq.foreach { path =>
-        if (df == null || path.rels.isEmpty) {
+        val headFromRow = df == null && path.rels.nonEmpty && {
+          val (srcV, dstV) = hopVars(path, 0)
+          rowBound(path.rels.head, srcV, dstV).exists(_._2 == path.nodes.head.v)
+        }
+        if ((df == null && !headFromRow) || path.rels.isEmpty) {
           require(df == null || bound.contains(path.nodes.head.v),
             s"pattern starting at ${path.nodes.head.v} is disconnected (cartesian product)")
           require(!outer || bound.contains(path.nodes.head.v),
@@ -1734,11 +1842,10 @@ object CypherLite {
         path.rels.zipWithIndex.foreach { case (rp, i) =>
           val here = path.nodes(i)
           val next = path.nodes(i + 1)
-          // forward: here -R-> next; reversed: next -R-> here
-          val (srcV, dstV) = if (rp.reversed) (next.v, here.v) else (here.v, next.v)
+          val (srcV, dstV) = hopVars(path, i)
           val dstLbl = labelOf.get(dstV)
           def plainEdge(t: String): DataFrame =
-            edges(spark, dir, t, dstLbl.getOrElse(
+            keyedEdges(spark, dir, t, dstLbl.getOrElse(
               if (t == "MENTIONS")
                 throw new IllegalArgumentException(
                   s"variable $dstV is never labeled in MATCH (MENTIONS needs a label)")
@@ -1753,6 +1860,9 @@ object CypherLite {
             else if (rp.variable.isDefined)
               edgesWithProps(spark, dir, rp.types.head, dstLbl)
             else plainEdge(rp.types.head)
+          val fromRow = rowBound(rp, srcV, dstV)
+          val ends = Seq("src_uid", "dst_uid") ++
+            fromRow.map(_._1 + "_key").filter(base.columns.contains)
           val expanded = rp.varLen.fold(base) { case (lo, hi) =>
             val seed = if (df != null && bound.contains(srcV))
               Some(df.select(col(s"${srcV}_uid").as("src_uid")).distinct())
@@ -1773,28 +1883,38 @@ object CypherLite {
                 acc.filter(cmp(col(np.prop), np.op, np.value))
               }
             }
-            varLenExpand(filtered.select("src_uid", "dst_uid"), lo, hi, seed)
+            varLenExpand(filtered.select(ends.map(col): _*), lo, hi, seed)
           }
           // a bound relationship variable prefixes every non-endpoint
           // column (`r_weight`, `r_type`) so r.prop / type(r) compile
-          // like node properties; without one the extras are dropped
-          val e = (rp.variable match {
-            case Some(rv) =>
-              expanded.columns.filterNot(c => c == "src_uid" || c == "dst_uid")
-                .foldLeft(expanded)((acc, c) =>
-                  acc.withColumnRenamed(c, s"${rv}_$c"))
-            case None => expanded.select("src_uid", "dst_uid")
-          })
-            .withColumnRenamed("src_uid", s"${srcV}_uid")
-            .withColumnRenamed("dst_uid", s"${dstV}_uid")
+          // like node properties; without one the extras are dropped.
+          // An endpoint bound from the edge row takes its key-derived
+          // properties from the key column (NULL-guarded under OPTIONAL
+          // MATCH; an inner hop drops its NULL endpoints, as the node
+          // join did); every other key column is dropped.
+          val endCols = Set("src_uid", "dst_uid", "src_key", "dst_key")
+          val rels = rp.variable.toSeq.flatMap(rv =>
+            expanded.columns.filterNot(endCols).map(c => col(c).as(s"${rv}_$c")))
+          val props = fromRow.flatMap { case (side, v) =>
+            val uid = col(s"${side}_uid")
+            GraphMeta.rowProps(labelOf(v)).map { case (p, f) =>
+              val c = f(col(s"${side}_key"))
+              (if (outer) when(uid.isNotNull, c) else c).as(s"${v}_$p")
+            }
+          }
+          val nonNull = if (outer) Nil else fromRow.map(r => col(s"${r._1}_uid").isNotNull)
+          val e = nonNull.foldLeft(expanded)(_ filter _)
+            .select(Seq(col("src_uid").as(s"${srcV}_uid"),
+              col("dst_uid").as(s"${dstV}_uid")) ++ rels ++ props: _*)
           val newVars = Seq(here.v, next.v).filterNot(bound.contains)
           require(!outer || newVars.forall(v => !inlineOf.contains(v)),
             "inline property filters on OPTIONAL MATCH variables are unsupported " +
               "(a post-join filter would delete the unmatched rows)")
           val joinKeys = Seq(here.v, next.v).filter(bound.contains).map(v => s"${v}_uid")
-          require(joinKeys.nonEmpty,
+          require(joinKeys.nonEmpty || df == null,
             s"hop ${here.v}-[:${rp.types.mkString("|")}]-${next.v} is disconnected from bound variables $bound")
-          df = df.join(e, joinKeys, joinType)
+          df = if (df == null) e else df.join(e, joinKeys, joinType)
+          bound ++= fromRow.map(_._2)
           newVars.foreach(bind(_, joinType))
         }
       }

@@ -1526,18 +1526,28 @@ class CypherLiteSpec extends AnyFunSuite {
   // ---------- BM25 keyword top-k: one-scan plan vs the multi-stage twin ----------
 
   /** A documents-only dir (the TEXT indexes read nothing else). */
-  private def docsDir(docs: Seq[(Long, String)]): String = {
+  private def docsDir(docs: Seq[(Long, String)]): String =
+    docsDirOf(docs.map { case (id, t) => (id, t, "s") })
+
+  /** A documents-only dir with each document's source given. */
+  private def docsDirOf(docs: Seq[(Long, String, String)]): String = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val d = java.nio.file.Files.createTempDirectory("graft_bm25").toString
-    spark.createDataFrame(java.util.Arrays.asList(docs.map { case (id, t) =>
-        Row(id, t, "en", "s", if (t == null) 0L else t.length.toLong) }: _*),
+    spark.createDataFrame(java.util.Arrays.asList(docs.map { case (id, t, src) =>
+        Row(id, t, "en", src, if (t == null) 0L else t.length.toLong) }: _*),
       StructType(Seq(StructField("doc_id", LongType, false), StructField("text", StringType),
         StructField("lang", StringType), StructField("source", StringType),
         StructField("n_chars", LongType, false))))
       .write.parquet(s"$d/documents.parquet")
     d
   }
+
+  /** A repeated doc_id repeats the Article uid (once with the same
+    * text, once with another); its chunks merge into one uid.
+    */
+  private lazy val repeatsDir = docsDir(Seq(1L -> "graph join plans",
+    1L -> "graph join plans", 2L -> "graph plans", 2L -> "window graph graph", 3L -> "join"))
 
   test("BM25 keyword top-k: the one-scan plan returns the multi-stage plan's rows") {
     def topk(f: (org.apache.spark.sql.SparkSession, String, GraphMeta.FtIndex, Seq[String], Int) =>
@@ -1553,10 +1563,7 @@ class CypherLiteSpec extends AnyFunSuite {
       2L -> null, 3L -> "", 4L -> "   ", 5L -> "émoji 🎉 naïve Ωmega ﬃ",
       6L -> "repeated repeated repeated repeated",
       7L -> "a perfectly ordinary document about spark clusters"))
-    // a repeated doc_id repeats the Article uid (once with the same
-    // text, once with another); its chunks merge into one uid
-    val repeats = docsDir(Seq(1L -> "graph join plans", 1L -> "graph join plans",
-      2L -> "graph plans", 2L -> "window graph graph", 3L -> "join"))
+    val repeats = repeatsDir
     val cases = Seq(
       TestSpark.sf -> Seq("spark", "join", "fast"),
       TestSpark.sf -> Seq("spark", "spark", "join", "join"), // duplicate query words
@@ -1577,6 +1584,165 @@ class CypherLiteSpec extends AnyFunSuite {
       if (got.nonEmpty) nonEmpty += 1
     }
     assert(nonEmpty >= 30, s"only $nonEmpty cases had a match")
+  }
+
+  // ---------- edge-row binding: the rows of the explicit node joins ----------
+
+  /** DirtyDataSpec's documents (NULL, empty, whitespace-only and
+    * unicode text, a NULL source), plus entity-dense documents under
+    * an empty, a unicode and a NULL source and a doc_id repeated under
+    * two sources.
+    */
+  private lazy val dirtyGraphDir = docsDirOf(Seq(
+    (1L, "a perfectly ordinary document about spark clusters", "a"),
+    (2L, null, "a"), (3L, "", "b"), (4L, "   ", "b"),
+    (5L, "émoji 🎉 naïve Ωmega ﬃ", "c"),
+    (6L, "repeated repeated repeated repeated", null),
+    (7L, "a perfectly ordinary document about spark clusters", "c"),
+    (8L, "customer value spark group row window", ""),
+    (9L, "line customer table part window column", "ünï 🎉 src"),
+    (10L, "group row value customer", null),
+    (11L, "spark table row line", "a"), (11L, "column part customer", "b")))
+
+  /** `(x:srcL)-[:rel]->(y:dstL)`, where `v` ("x" or "y") is the
+    * endpoint whose binding is under test.
+    */
+  private case class RowHop(rel: String, srcL: String, dstL: String, v: String) {
+    def label: String = if (v == "x") srcL else dstL
+    def other: String = if (v == "x") "y" else "x"
+    def otherLabel: String = if (v == "x") dstL else srcL
+    def pattern: String = s"(x:$srcL)-[:$rel]->(y:$dstL)"
+    // OPTIONAL MATCH starts at the bound other endpoint
+    def optPattern: String =
+      if (v == "x") s"(y)<-[:$rel]-(x:$srcL)" else s"(x)-[:$rel]->(y:$dstL)"
+  }
+
+  private def nodesAs(dir: String, label: String, v: String) = {
+    val n = CypherLite.nodes(spark, dir, label)
+    n.select(n.columns.map(c => col(c).as(s"${v}_$c")).toSeq: _*)
+  }
+
+  private def collectMaps(df: org.apache.spark.sql.DataFrame): Seq[Map[String, Any]] =
+    df.collect().map(r => r.getValuesMap[Any](r.schema.fieldNames)).toSeq
+
+  /** `(vars(0):labels(0))-[:rels(0)]->(vars(1):labels(1))…` (each rel
+    * a type union) with every node table joined explicitly on its uid.
+    */
+  private def joinedRows(dir: String, vars: Seq[String], labels: Seq[String],
+      rels: Seq[Seq[String]], extra: Seq[org.apache.spark.sql.Column] = Nil)
+      : Seq[Map[String, Any]] = {
+    val df = rels.indices.foldLeft(nodesAs(dir, labels(0), vars(0))) { (acc, i) =>
+      val e = rels(i).map(r => CypherLite.edges(spark, dir, r, labels(i + 1))).reduce(_ union _)
+      acc.join(e.select(col("src_uid").as(s"${vars(i)}_uid"),
+          col("dst_uid").as(s"${vars(i + 1)}_uid")), s"${vars(i)}_uid")
+        .join(nodesAs(dir, labels(i + 1), vars(i + 1)), s"${vars(i + 1)}_uid")
+    }
+    collectMaps(df.select(col("*") +: extra: _*))
+  }
+
+  /** OPTIONAL MATCH of hop `h` from every node of its other endpoint:
+    * edge and node tables left-outer joined explicitly.
+    */
+  private def optionalRows(dir: String, h: RowHop): Seq[Map[String, Any]] = {
+    val e = CypherLite.edges(spark, dir, h.rel, h.dstL)
+      .select(col("src_uid").as("x_uid"), col("dst_uid").as("y_uid"))
+    collectMaps(nodesAs(dir, h.otherLabel, h.other)
+      .join(e, Seq(s"${h.other}_uid"), "left_outer")
+      .join(nodesAs(dir, h.label, h.v), Seq(s"${h.v}_uid"), "left_outer"))
+  }
+
+  private def sortedRows(rows: Seq[Seq[Any]]): Seq[Seq[String]] =
+    rows.map(_.map(String.valueOf)).sortBy(_.mkString("\u0001"))
+
+  test("edge-row binding returns the rows of the explicit node-table joins") {
+    import org.apache.spark.sql.functions.{struct, to_json}
+    val hops = Seq(
+      RowHop("PUBLISHED", "Source", "Article", "x"),
+      RowHop("AUTHORED", "Person", "Article", "x"),
+      RowHop("MENTIONS", "Chunk", "Person", "y"),
+      RowHop("MENTIONS", "Chunk", "Organization", "y"),
+      RowHop("MENTIONS", "Chunk", "Location", "y"),
+      RowHop("MENTIONS", "Chunk", "Person", "x"),
+      RowHop("CONTAINS", "Article", "Chunk", "y"),
+      RowHop("HAS_TOPIC", "Article", "Topic", "y"),
+      RowHop("CO_OCCURS", "Entity", "Entity", "y"))
+    def rows(dir: String, q: String): Seq[Seq[String]] =
+      sortedRows(CypherLite.run(spark, dir, q).collect().map(_.toSeq).toSeq)
+    // (query, rows, expected rows) per fixture; the fixtures run
+    // concurrently, each on its own thread, since the queries are tiny
+    def cases(dir: String) = hops.flatMap { h =>
+      val v = h.v
+      val props = CypherLite.nodes(spark, dir, h.label).columns.filterNot(_ == "uid").toSeq
+      val mapExpr = to_json(struct(props.map(p => col(s"${v}_$p").as(p)): _*)).as("__map")
+      val f = joinedRows(dir, Seq("x", "y"), Seq(h.srcL, h.dstL), Seq(Seq(h.rel)),
+        extra = Seq(mapExpr))
+      val o = optionalRows(dir, h)
+      def uid(r: Map[String, Any]) = r(s"${v}_uid")
+      // each key-derived property on its own (a Chunk property read
+      // keeps the Chunk join, which the map and OPTIONAL forms cover)
+      val byProp = props.filter(_ => h.label != "Chunk").map(p =>
+        s"MATCH ${h.pattern} RETURN x.uid, y.uid, $v.$p" ->
+          f.map(r => Seq(r("x_uid"), r("y_uid"), r(s"${v}_$p"))))
+      val forms = Seq(
+        s"MATCH ${h.pattern} RETURN x.uid, y.uid" -> f.map(r => Seq(r("x_uid"), r("y_uid"))),
+        s"MATCH ${h.pattern} WITH DISTINCT $v RETURN count($v) AS n" ->
+          Seq(Seq(f.map(r => r.filter(_._1.startsWith(s"${v}_")))
+            .distinct.count(uid(_) != null).toLong)),
+        s"MATCH ${h.pattern} RETURN count($v) AS n" -> Seq(Seq(f.count(uid(_) != null).toLong)),
+        s"MATCH ${h.pattern} RETURN labels($v) AS l, $v.uid" ->
+          f.map(r => Seq(s"""["${h.label}"]""", uid(r))),
+        s"MATCH ${h.pattern} RETURN $v{${props.map("." + _).mkString(", ")}} AS m" ->
+          f.map(r => Seq(r("__map"))),
+        s"MATCH (${h.other}:${h.otherLabel}) OPTIONAL MATCH ${h.optPattern} " +
+          s"RETURN ${h.other}.uid, $v.uid" ->
+          o.map(r => Seq(r(s"${h.other}_uid"), uid(r))),
+        s"MATCH (${h.other}:${h.otherLabel}) OPTIONAL MATCH ${h.optPattern} " +
+          s"RETURN ${h.other}.uid, ${(s"$v.uid" +: props.map(p => s"$v.$p")).mkString(", ")}" ->
+          o.map(r => r(s"${h.other}_uid") +: uid(r) +: props.map(p => r(s"${v}_$p"))))
+      (byProp ++ forms).map { case (q, want) => (s"$q on $dir", rows(dir, q), sortedRows(want)) }
+    }
+    val checked = Overlap.all(Seq(TestSpark.sf, dirtyGraphDir, repeatsDir)
+      .map(dir => () => cases(dir))).flatten
+    for ((what, got, want) <- checked) assert(got == want, what)
+    val nonEmpty = checked.count { case (_, got, _) => got.nonEmpty && got != Seq(Seq("0")) }
+    assert(nonEmpty >= 120, s"only $nonEmpty cases returned rows")
+    // a chain that binds its head, Chunk and entity from edge rows and
+    // joins Article, on every fixture
+    for (dir <- Seq(TestSpark.sf, dirtyGraphDir, repeatsDir)) {
+      val q = "MATCH (s:Source)-[:PUBLISHED]->(a:Article)-[:CONTAINS]->(c:Chunk)" +
+        "-[:MENTIONS]->(o:Organization) RETURN s.uid, s.name, s.type, s.url, a.uid, a.url, c.uid, o.name"
+      val want = joinedRows(dir, Seq("s", "a", "c", "o"),
+        Seq("Source", "Article", "Chunk", "Organization"),
+        Seq(Seq("PUBLISHED"), Seq("CONTAINS"), Seq("MENTIONS")))
+        .map(r => Seq("s_uid", "s_name", "s_type", "s_url", "a_uid", "a_url", "c_uid", "o_name")
+          .map(r(_)))
+      assert(rows(dir, q) == sortedRows(want), s"chain on $dir")
+    }
+    // a wrong written label keeps its node join, so it still matches
+    // nothing, where the right label matches
+    val wrong = Seq(
+      "(x:Person)-[:PUBLISHED]->(y:Article)" -> "(x:Source)-[:PUBLISHED]->(y:Article)",
+      "(x:Source)-[:AUTHORED]->(y:Article)" -> "(x:Person)-[:AUTHORED]->(y:Article)",
+      "(x:Topic)-[:MENTIONS]->(y:Person)" -> "(x:Chunk)-[:MENTIONS]->(y:Person)",
+      "(x:Article)-[:CONTAINS]->(y:Entity)" -> "(x:Article)-[:CONTAINS]->(y:Chunk)",
+      "(x:Article)-[:HAS_TOPIC]->(y:Source)" -> "(x:Article)-[:HAS_TOPIC]->(y:Topic)",
+      "(x:Entity)-[:CO_OCCURS]->(y:Person)" -> "(x:Entity)-[:CO_OCCURS]->(y:Entity)")
+    for ((bad, good) <- wrong) {
+      assert(rows(TestSpark.sf, s"MATCH $bad RETURN x.uid, y.uid").isEmpty, bad)
+      assert(rows(TestSpark.sf, s"MATCH $good RETURN x.uid, y.uid").nonEmpty, good)
+    }
+    // a mixed-type hop keeps its joins
+    for (dir <- Seq(TestSpark.sf, dirtyGraphDir); dst <- Seq("Topic", "Chunk")) {
+      val want = joinedRows(dir, Seq("x", "y"), Seq("Article", dst),
+        Seq(Seq("CONTAINS", "HAS_TOPIC"))).map(r => Seq(r("x_uid"), r("y_uid")))
+      assert(rows(dir, s"MATCH (x:Article)-[:CONTAINS|HAS_TOPIC]->(y:$dst) RETURN x.uid, y.uid")
+        == sortedRows(want), s"mixed hop to $dst on $dir")
+    }
+    // Article keeps its join: a doc_id repeated in the documents
+    // repeats both its PUBLISHED edge and its node row, so Article:1
+    // meets its source 2 × 2 times
+    val rep = rows(repeatsDir, "MATCH (s:Source)-[:PUBLISHED]->(a:Article) RETURN s.name, a.uid")
+    assert(rep.count(_ == Seq("s", "Article:1")) == 4, s"Article repeats lost: $rep")
   }
 
   test("path variables on ordinary MATCH: p ≡ uid composition; length is the hop count") {

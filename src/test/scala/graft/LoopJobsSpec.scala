@@ -11,9 +11,9 @@ import graft.TestSpark.jobsDuring
   * queries are job-count bound at bench scale, so a loop refactor that
   * moves a barrier, flips its eagerness or adds a pass must show up
   * here as a changed count, not only as a slower benchmark. The
-  * serving loop's vector and hybrid CALLs and their BM25 keyword leg
-  * are pinned the same way: on a small corpus their latency is their
-  * fixed Spark work.
+  * serving loop's vector and hybrid CALLs, their BM25 keyword leg and
+  * the MATCH shapes it asks (ex1, ex2, ex3, ex8, ex14) are pinned the
+  * same way: on a small corpus their latency is their fixed Spark work.
   *
   * Each query runs once unmeasured first, so one-off session work
   * (parquet schema inference, codegen) never lands in the pinned
@@ -41,8 +41,13 @@ class LoopJobsSpec extends AnyFunSuite {
     ("q_cypher_sp", 10, 1),
     ("q_cypher_wpath", 15, 6),
     ("q_cypher_asp", 18, 1),
-    ("q_cypher_vector", 2, 10),
-    ("q_cypher_hybrid", 7, 10))
+    ("q_cypher_vector", 2, 8),
+    ("q_cypher_hybrid", 7, 8),
+    ("q_cypher_ex1", 0, 8),
+    ("q_cypher_ex2", 0, 10),
+    ("q_cypher_ex3", 0, 5),
+    ("q_cypher_ex8", 0, 10),
+    ("q_cypher_ex14", 9, 10))
 
   /** Jobs while `q()` builds its frame and while it is collected, after
     * one unmeasured run.

@@ -189,6 +189,38 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("edge-row binds: no Source or entity node-table aggregate in ex2 or the vector CALL") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    // the node table of a key-derived label is a distinct over its one
+    // key column (a document's source, a mention's name)
+    def keyDistincts(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.queryExecution.optimizedPlan.collect {
+        case a: Aggregate if a.groupingExpressions.size == 1 =>
+          a.groupingExpressions.head.references.map(_.name).mkString(",")
+      }.filter(Set("source", "name"))
+    for ((name, q) <- Seq("ex2" -> cypher.CypherLite.Ex2, "vector" -> cypher.CypherLite.ExVec)) {
+      val df = cypher.CypherLite.run(spark, TestSpark.sf, q)
+      assert(keyDistincts(df).isEmpty,
+        s"$name still aggregates a node table:\n${df.queryExecution.optimizedPlan}")
+    }
+  }
+
+  test("an entity-name IN filter still reaches the standing mentions scan") {
+    import graft.operators.TextPipeline
+    sources.Catalog.materializeGraph(spark, TestSpark.sf)
+    spark.conf.set(TextPipeline.MaterializedConf, TestSpark.sf)
+    try {
+      // ex1: o:Person binds from the MENTIONS edge row, its name read
+      // off the edge's name column
+      val p = plan(cypher.CypherLite.run(spark, TestSpark.sf, cypher.CypherLite.Ex1))
+      val scans = p.linesIterator.filter(l => l.contains("graft_mentions") &&
+        l.contains("PushedFilters")).toSeq
+      assert(scans.nonEmpty, s"no mentions scan:\n$p")
+      assert(scans.forall(_.contains("In(name, [customer,line customer])")),
+        s"name IN not pushed into every mentions scan:\n${scans.mkString("\n")}")
+    } finally spark.conf.unset(TextPipeline.MaterializedConf)
+  }
+
   test("RRF legs are TakeOrdered pools; fusion never windows the corpus") {
     val p = plan(operators.Retrieval.qRrf(spark, TestSpark.sf))
     assert(p.contains("TakeOrderedAndProject"), s"expected TakeOrdered legs:\n$p")
