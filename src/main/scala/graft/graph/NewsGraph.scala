@@ -112,8 +112,10 @@ object NewsGraph {
       Props.category(col("chunk_id")).as("category"),
       Props.section(col("chunk_id")).as("section"),
       col("chunk_id").cast("long").as("position"))
-    // Source carries type + url (graph.py:74 name/type/url)
-    val sources = docs.select(col("source")).distinct().select(
+    // Source carries type + url (graph.py:74 name/type/url); like
+    // Person below, no node for a NULL source (Neo4j makes none)
+    val sourceKeys = docs.select(col("source")).filter(col("source").isNotNull).distinct()
+    val sources = sourceKeys.select(
       concat(lit("Source:"), col("source")).as("uid"),
       lit("Source").as("label"),
       col("source").as("name"),
@@ -126,7 +128,7 @@ object NewsGraph {
       .select(concat(col("label"), lit(":"), col("name")).as("uid"),
         col("label"), col("name")))
     // authors ≡ publisher fallback (crawler.py:44), labeled Person
-    val authors = bare(docs.select(col("source")).distinct().select(
+    val authors = bare(sourceKeys.select(
       concat(lit("Person:"), col("source")).as("uid"),
       lit("Person").as("label"), col("source").as("name")))
     val topics = bare(qArticleTopics(spark, dir).select(col("topic")).distinct()
@@ -158,7 +160,8 @@ object NewsGraph {
       .select("doc_id", "label", "name").barrier()
     // Person = gazetteer persons ∪ author-persons (publisher fallback)
     val personNames = mentions.filter(col("label") === "person")
-      .select(col("name")).union(docs.select(col("source"))).distinct()
+      .select(col("name")).union(docs.select(col("source")).filter(col("source").isNotNull))
+      .distinct()
     val wTop = Window.partitionBy("doc_id").orderBy(col("n").desc, col("label"))
     val topics = mentions.groupBy("doc_id", "label")
       .agg(count(lit(1)).as("n"))
@@ -168,7 +171,7 @@ object NewsGraph {
     val nodeCounts = Seq(
       docs.select(lit("node").as("kind"), lit("Article").as("label"), count(lit(1)).as("cnt")),
       chunks.select(lit("node").as("kind"), lit("Chunk").as("label"), count(lit(1)).as("cnt")),
-      docs.select(col("source")).distinct()
+      docs.select(col("source")).filter(col("source").isNotNull).distinct()
         .select(lit("node").as("kind"), lit("Source").as("label"), count(lit(1)).as("cnt")),
       personNames.select(lit("node").as("kind"), lit("Person").as("label"), count(lit(1)).as("cnt")),
       mentions.filter(col("label") =!= "person")
@@ -486,7 +489,7 @@ object NewsGraph {
          |  SELECT 'Source:' || source, 'Source', source,
          |    NULL, NULL, ${Props.SourceUrlSql}, ${Props.SourceTypeSql},
          |    NULL, NULL, NULL
-         |  FROM (SELECT DISTINCT source FROM documents)
+         |  FROM (SELECT DISTINCT source FROM documents WHERE source IS NOT NULL)
          |  UNION ALL
          |  SELECT el || ':' || name, el, name,
          |    NULL, NULL, NULL, NULL, NULL, NULL, NULL
@@ -495,7 +498,7 @@ object NewsGraph {
          |  UNION ALL
          |  SELECT 'Person:' || source, 'Person', source,
          |    NULL, NULL, NULL, NULL, NULL, NULL, NULL
-         |  FROM (SELECT DISTINCT source FROM documents)
+         |  FROM (SELECT DISTINCT source FROM documents WHERE source IS NOT NULL)
          |  UNION ALL
          |  SELECT 'Topic:' || topic, 'Topic', topic,
          |    NULL, NULL, NULL, NULL, NULL, NULL, NULL
@@ -511,7 +514,7 @@ object NewsGraph {
          |UNION ALL SELECT 'node', 'Source', count(DISTINCT source) FROM documents
          |UNION ALL SELECT 'node', 'Person', count(*) FROM (
          |  SELECT name FROM mentions WHERE label = 'person'
-         |  UNION SELECT source FROM documents)
+         |  UNION SELECT source FROM documents WHERE source IS NOT NULL)
          |UNION ALL SELECT 'node', el, count(*) FROM
          |  (SELECT DISTINCT name, $EntityNodeLabelSql AS el FROM mentions
          |   WHERE label <> 'person') GROUP BY el

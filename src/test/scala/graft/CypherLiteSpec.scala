@@ -91,6 +91,32 @@ class CypherLiteSpec extends AnyFunSuite {
     }
   }
 
+  test("path front: reversed RETURN items give the canonical rows in the written column order") {
+    // the single-item forms (Ex23, ExWsp, Ex43) reverse to their own text
+    Seq(ExSpPath, ExWspPath, ExAsp, ExAspPaths).foreach { q =>
+      val at = q.lastIndexOf("RETURN ") + "RETURN ".length
+      val items = q.substring(at).split(", ").toSeq
+      val reversed = CypherLite.run(spark, TestSpark.sf, q.take(at) + items.reverse.mkString(", "))
+      assert(reversed.columns.toSeq == items.reverse.map(_.split(" ").last), q)
+      val canonical = CypherLite.run(spark, TestSpark.sf, q)
+      val got = reversed.select(canonical.columns.toSeq.map(col): _*).collect().toSeq
+      val want = canonical.collect().toSeq
+      assert(want.nonEmpty && got == want, s"$q\n  got  $got\n  want $want")
+    }
+  }
+
+  test("path front: an unsupported item set or a non-path variable names the function") {
+    val head = "((a:Entity {name:'spark group'})-[:CO_OCCURS*1..4]-(b:Entity {name:'column column'})) "
+    Seq(
+      s"MATCH p = shortestPath$head RETURN count(p) AS n" -> "shortestPath",
+      s"MATCH p = allShortestPaths$head RETURN nodes(p) AS path" -> "allShortestPaths",
+      s"MATCH p = shortestPath$head RETURN length(q) AS l" -> "shortestPath").foreach {
+      case (q, fn) =>
+        val e = intercept[IllegalArgumentException](CypherLite.run(spark, TestSpark.sf, q))
+        assert(e.getMessage.startsWith(s"$fn:"), e.getMessage)
+    }
+  }
+
   test("exists pattern semi-join complements the NOT-pattern anti-join") {
     val total = CypherLite.run(spark, TestSpark.sf,
       "MATCH (c:Chunk) RETURN count(c) AS n").head().getLong(0)

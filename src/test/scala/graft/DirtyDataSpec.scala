@@ -199,6 +199,22 @@ class DirtyDataSpec extends AnyFunSuite {
   runs("q_dedup_simhash_topk")(operators.Dedup.qDedupSimhashTopk(spark, dir))
   runs("q_rag_context")(graph.NewsGraph.qRagContext(spark, dir))
 
+  test("no node for a NULL key: Source and Person skip the NULL source") {
+    def rows(q: String) = cypher.CypherLite.run(spark, dir, q).collect().toSeq
+    // sources a, b, c and one NULL: three Source nodes, each counted once
+    assert(rows("MATCH (s:Source) RETURN count(s) AS n, count(*) AS m")
+      .map(r => (r.getLong(0), r.getLong(1))) == Seq((3L, 3L)))
+    Seq("Source", "Person").foreach { l =>
+      val uids = rows(s"MATCH (v:$l) RETURN v.uid AS uid")
+      assert(uids.nonEmpty && uids.forall(!_.isNullAt(0)), s"$l: $uids")
+    }
+    val ft = rows("CALL db.index.fulltext.queryNodes('PersonName', 'a~0.8', {limit: 1000}) " +
+      "YIELD node, score RETURN node.uid AS uid, node.name AS name, labels(node)[0] AS label, score")
+    assert(ft.nonEmpty && ft.forall(!_.isNullAt(0)), s"fulltext: $ft")
+    val nodes = graph.NewsGraph.qGraphNodes(spark, dir).select("uid").collect()
+    assert(nodes.nonEmpty && nodes.forall(!_.isNullAt(0)), "q_graph_nodes has a NULL uid")
+  }
+
   test("exact dedup still pairs the surviving identical docs") {
     val d = operators.Dedup.qDedupExact(spark, dir)
     // docs 1 and 7 are byte-identical; the dirt must not break that

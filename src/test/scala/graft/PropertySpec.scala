@@ -488,4 +488,71 @@ class PropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  /** The seven path forms as (function, RETURN items) — the texts the
+    * grammar fuzz below mutates.
+    */
+  private val pathForms: Seq[(String, Seq[String])] = Seq(
+    "shortestPath" -> Seq("length(p) AS len"),
+    "shortestPath" -> Seq("wlength(p) AS wcost"),
+    "shortestPath" -> Seq("length(p) AS len", "nodes(p) AS path"),
+    "shortestPath" -> Seq("p"),
+    "shortestPath" -> Seq("wlength(p) AS wcost", "nodes(p) AS path", "relationships(p) AS rels"),
+    "allShortestPaths" -> Seq("length(p) AS len", "count(p) AS n"),
+    "allShortestPaths" -> Seq("length(p) AS len", "count(p) AS n", "nodes(p) AS path"))
+
+  test("path front: the pure parse returns a PathCall or throws IllegalArgumentException") {
+    import graft.cypher.CypherLite.{parsePathCall, pathKernel}
+    // one mutated path-form text and whether its path function is real
+    val mutated: Gen[(String, Boolean)] = for {
+      (fn0, items0) <- Gen.oneOf(pathForms)
+      fn <- Gen.frequency(8 -> Gen.const(fn0), 1 -> Gen.oneOf("shortestpath", "longestPath"))
+      pv <- Gen.frequency(6 -> Gen.const("p"), 1 -> Gen.const("q"))
+      perm <- Gen.oneOf(items0.permutations.toSeq)
+      keep <- Gen.choose(0, items0.size)
+      extra <- Gen.frequency(3 -> Gen.const(Nil), 1 -> Gen.oneOf("count(p) AS c",
+        "size(p) AS s", "lenght(p) AS l", "nodes(q) AS n", "a", "length(p)", "count(*) AS n",
+        "length(p) AS", "p AS x", "nodes(p)[0] AS f", "length(p) + 1 AS l", "DISTINCT p",
+        "length(p) AS len LIMIT 1", "'p'").map(Seq(_)))
+      strip <- Gen.frequency(5 -> Gen.const(false), 1 -> Gen.const(true))
+      onVar <- Gen.frequency(6 -> Gen.const("p"), 1 -> Gen.oneOf("q", "a"))
+      (lo, hi) <- Gen.frequency(6 -> Gen.const(("1", "4")), 1 -> Gen.zip(
+        Gen.oneOf("0", "1", "2", "x", "", "-1", "99999999999"),
+        Gen.oneOf("0", "1", "8", "9", "y", "", "99999999999")))
+      (l, r) <- Gen.frequency(6 -> Gen.const(("-", "-")), 1 -> Gen.oneOf(("<-", "-"), ("-", "->")))
+      label <- Gen.frequency(6 -> Gen.const("Entity"), 1 -> Gen.oneOf("Foo", "Person"))
+      rel <- Gen.frequency(6 -> Gen.const("CO_OCCURS"), 1 -> Gen.oneOf("KNOWS", "MENTIONS"))
+    } yield {
+      val items = (perm.take(math.max(keep, 1)) ++ extra)
+        .map(i => if (strip) i.replaceAll(" AS \\w+$", "") else i)
+        .map(_.replace("(p)", s"($onVar)"))
+      (s"MATCH $pv = $fn((a:$label {name:'spark group'})$l[:$rel*$lo..$hi]$r" +
+        s"(b:Entity {name:'column column'})) RETURN ${items.mkString(", ")}",
+        Set("shortestPath", "allShortestPaths")(fn))
+    }
+    var (parsed, refused) = (0, 0)
+    samples(mutated, 600).foreach { case (q, claimed) =>
+      try {
+        val c = parsePathCall(q)
+        assert(c.isDefined == claimed, s"claim ${c.isDefined} != $claimed for: $q")
+        c.foreach(pathKernel)
+        parsed += 1
+      } catch {
+        case _: IllegalArgumentException => refused += 1
+        case e: Throwable => fail(s"${e.getClass.getName} (not IllegalArgumentException) for: $q", e)
+      }
+    }
+    // both outcomes occur, so neither side is vacuous
+    assert(parsed > 50 && refused > 50, s"parsed $parsed, refused $refused")
+    // the unmutated forms, items in any order, all compile to a kernel
+    pathForms.foreach { case (fn, items) =>
+      items.permutations.foreach { perm =>
+        val q = s"MATCH p = $fn((a:Entity {name:'x'})-[:CO_OCCURS*1..4]-(b:Entity {name:'y'})) " +
+          s"RETURN ${perm.mkString(", ")}"
+        val c = parsePathCall(q).get
+        assert(c.items.map(_.alias) == perm.map(_.split(" ").last))
+        pathKernel(c)
+      }
+    }
+  }
 }
