@@ -2794,17 +2794,34 @@ object CypherLite {
     * shortestPath pattern so "how STRONGLY are X and Y connected"
     * composes with the r.weight property. Only the weighted
     * relationship supports it (pathKernel checks).
+    *
+    * An edge list within Loops.DriverMaxEdges relaxes on the driver
+    * ([[uidDistances]]). A larger one cuts the loop state with eager
+    * barriers: the first read of a lazily cut state can run inside a
+    * broadcast exchange while adaptive execution submits a map stage
+    * over the same RDD, and that pair once deadlocked the DAG
+    * scheduler on the checkpoint's lock.
     */
   private def spDistance(weighted: Boolean): PathKernel = (spark, dir, c) => {
-    val (e, len) = if (!weighted) (edges(spark, dir, c.rel, c.dstLabel), lit(1L))
-      else (edgesWithProps(spark, dir, c.rel, None)
-        .selectExpr("src_uid", "dst_uid", "1000000 div weight AS cost"), col("cost"))
+    val e = if (!weighted) edges(spark, dir, c.rel, c.dstLabel)
+      else edgesWithProps(spark, dir, c.rel, None)
+        .selectExpr("src_uid", "dst_uid", "1000000 div weight AS cost")
     val atDst = col("node") === c.dstUid
-    (Loops.relaxMin(e.barrier(false), "src_uid", "dst_uid", c.srcUid,
-        zero = lit(0L), len = len, rounds = c.hi, every = 3, eager = false)
+    (uidDistances(c.srcUid, c.hi, weighted)(e.barrier(false))
       .filter(if (weighted) atDst else atDst && col("dist") >= c.lo),
       Map((if (weighted) "wlength(p)" else "length(p)") -> col("dist")))
   }
+
+  /** (node, dist BIGINT) from `seed` within `rounds` relaxations over a
+    * barriered (src_uid, dst_uid) edge list of unit hops or, when
+    * `weighted`, a (src_uid, dst_uid, cost) one.
+    */
+  private[graft] def uidDistances(seed: String, rounds: Int, weighted: Boolean) = Loops.Plans(
+    local = (spark, rows) => Loops.frame(spark, "node STRING, dist BIGINT",
+      Loops.relaxMinLocal(rows.map(r => (r.getString(0), r.getString(1),
+        if (weighted) r.getLong(2) else 1L)), seed, rounds).map { case (n, d) => Row(n, d) }),
+    distributed = e => Loops.relaxMin(e, "src_uid", "dst_uid", seed, zero = lit(0L),
+      len = if (weighted) col("cost") else lit(1L), rounds = rounds, every = 3, eager = true))
 
   /** Bare `RETURN p` (round 11) — the whole-path projection: Neo4j's
     * interleaved node-relationship path value, the last witness form
@@ -2999,17 +3016,20 @@ object CypherLite {
     * Scale shape: the relaxation is the SAME one-equi-join-per-round
     * loop as wlength() with a 3-column struct-min instead of a plain
     * min (pred + edge weight ride the aggregate — never a path
-    * enumeration); the walk-back is hi 1-row⋈V lookups.
+    * enumeration); the walk-back is hi 1-row⋈V lookups. The edge
+    * list and the loop state are cut by eager barriers (see
+    * spDistance): no read inside a later plan is a lazy checkpoint's
+    * first fill.
     */
   private[graft] def weightedWitnessOn(spark: SparkSession, e0: DataFrame,
       rel: String, srcUid: String, dstUid: String, hi: Int): DataFrame = {
     val e = e0.selectExpr("src_uid", "dst_uid", "weight",
         "1000000 div weight AS cost")
-      .barrier(false)
+      .barrier()
     val dist0 = spark.range(1)
       .select(lit(srcUid).as("node"), lit(0L).as("dist"),
         lit(null).cast("string").as("pred"), lit(null).cast("long").as("pw"))
-    val dist = Loops.iterate(dist0, hi, every = 3, eager = false) { dist =>
+    val dist = Loops.iterate(dist0, hi, every = 3, eager = true) { dist =>
       val relaxed = dist.join(e, dist("node") === e("src_uid"))
         .select(col("dst_uid").as("node"), (col("dist") + col("cost")).as("dist"),
           dist("node").as("pred"), col("weight").as("pw"))

@@ -1,21 +1,38 @@
 package graft.graph
 
+import scala.collection.mutable
+
 import graft.Ckpt.BarrierOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextPipeline
 
 /** Graph analytics over the entity co-occurrence graph — the "GraphX
-  * for analytics, bulk queries" half of the north star. Implemented as
-  * DataFrame iteration (Pregel-style power iteration) rather than RDD
-  * GraphX: each step is a shuffle-on-src join the optimizer can plan,
-  * AQE can re-balance, and the oracle can replay. localCheckpoint()
-  * truncates lineage so 10 iterations don't stack 10 plans. A barrier
-  * does not keep partitioning: the checkpointed edges report
-  * UnknownPartitioning, so each barrier segment exchanges them on the
-  * join key again (one edge-sized shuffle per segment, not one per
-  * query).
+  * for analytics, bulk queries" half of the north star. Each loop
+  * query builds and barriers its edge list, then runs one of two plans
+  * (`Loops.Plans`), picked by the edge list's size:
+  *
+  *  - within `Loops.DriverMaxEdges` rows, one job collects the edge
+  *    list and every pre-pass (degrees, node count, Katz's divisor,
+  *    LPA's seeds) and every round runs on the driver; the result is a
+  *    local relation the query's final projection and ordering read.
+  *    A distributed round costs several Spark jobs of 20–35 ms for a
+  *    few thousand rows of work, so this is what a news-sized entity
+  *    graph runs.
+  *  - above it, DataFrame iteration (Pregel-style power iteration)
+  *    rather than RDD GraphX: each step is a shuffle-on-src join the
+  *    optimizer can plan, AQE can re-balance, and the oracle can
+  *    replay. A `Ckpt.barrier` every few rounds truncates lineage so
+  *    10 iterations don't stack 10 plans. A barrier does not keep
+  *    partitioning: the checkpointed edges report UnknownPartitioning,
+  *    so each barrier segment exchanges them on the join key again
+  *    (one edge-sized shuffle per segment, not one per query).
+  *
+  * Both plans compute the same rows (DriverLoopsSpec), so the
+  * unrolled-CTE oracles never see which one ran. Entity-graph edges
+  * never carry a NULL endpoint (`collect_set` drops NULL names), which
+  * the driver plans rely on.
   */
 object Analytics {
 
@@ -180,17 +197,40 @@ object Analytics {
     * uniform weights, undirected graph restricted to degree ≥ 1 nodes
     * (no dangling mass).
     */
-  def qPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).select("src", "dst").barrier()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("d")).barrier()
-    val n = deg.count()
-    val pr = Loops.powerIterate(
-      deg.select(col("src").as("node"), lit(1.0 / n).as("rank")), e, deg,
-      share = col("rank") / col("d"), teleport = lit((1.0 - Damping) / n),
-      damping = Damping, rounds = PrIters, every = 3, eager = true)
-    pr.select(col("node").as("name"), round(col("rank"), 6).as("pagerank"))
+  def qPagerank(spark: SparkSession, dir: String): DataFrame =
+    pagerankRanks(edges(spark, dir).select("src", "dst").barrier())
+      .select(col("node").as("name"), round(col("rank"), 6).as("pagerank"))
       .orderBy(col("pagerank").desc, col("name"))
-  }
+
+  /** (node, rank) over a barriered (src, dst) edge list. */
+  private[graft] val pagerankRanks = Loops.Plans(
+    local = (spark, rows) => {
+      val es = Loops.pairs(rows)
+      val d = es.groupMapReduce(_._1)(_ => 1L)(_ + _)
+      val n = d.size.toLong
+      rankFrame(spark, Loops.powerIterateLocal(es, d.keys, _ => 1.0 / n,
+        (r, i) => r / d(es(i)._1).toDouble, _ => (1.0 - Damping) / n, Damping, PrIters))
+    },
+    distributed = e => {
+      val deg = e.groupBy("src").agg(count(lit(1)).as("d")).barrier()
+      val n = deg.count()
+      Loops.powerIterate(
+        deg.select(col("src").as("node"), lit(1.0 / n).as("rank")), e, deg,
+        share = col("rank") / col("d"), teleport = lit((1.0 - Damping) / n),
+        damping = Damping, rounds = PrIters, every = 3, eager = true)
+    })
+
+  /** A driver plan's rows as a local relation in one partition: the
+    * query's final ordering and aggregates then need no exchange, so
+    * its collect is one job instead of a range-sampling job, a map
+    * stage and the result stage.
+    */
+  private def driverFrame(spark: SparkSession, ddl: String, rows: Iterable[Row]): DataFrame =
+    Loops.frame(spark, ddl, rows).coalesce(1)
+
+  /** A driver-side (node, rank) table as the frame powerIterate returns. */
+  private def rankFrame(spark: SparkSession, pr: Map[String, Double]): DataFrame =
+    driverFrame(spark, "node STRING, rank DOUBLE", pr.map { case (n, r) => Row(n, r) })
 
   val KatzIters = 4
   /** FLOOR of the attenuation divisor — the effective divisor is
@@ -231,33 +271,56 @@ object Analytics {
     * map-side-combined rollup + 1-row action (the HITS-normalizer
     * driver-scalar pattern).
     */
-  def qKatz(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).barrier(false)
-    val maxWd = Option(
-      e.groupBy("src").agg(sum("weight").cast("long").as("wd"))
-        .agg(max(col("wd"))).first().getAs[java.lang.Long](0))
-      .fold(0L)(_.longValue())
+  def qKatz(spark: SparkSession, dir: String): DataFrame =
+    katzScores(edges(spark, dir).barrier(false))
+      .select(col("node").as("name"), round(col("s") / lit(1e6), 6).as("katz"))
+      .orderBy(col("katz").desc, col("name"))
+
+  /** kd = max(KatzDiv, the max weighted degree), guarded for BIGINT. */
+  private def katzDivisor(maxWd: Long): Long = {
     val kd = math.max(KatzDiv, maxWd)
     require(kd < 2000000000000L,
       s"q_katz: max weighted degree $kd leaves no BIGINT headroom " +
         s"(need kd·${KatzIters}e6 < 2^63); re-scale edge weights first")
-    val x0 = e.select(col("src").as("node")).distinct()
-      .withColumn("s", lit(1000000L))
-    val x = Loops.iterate(x0, KatzIters, every = 2, eager = true) { x =>
-      val inc = x.select(col("node").as("src"), col("s"))
-        .join(e, "src")
-        .groupBy("dst")
-        .agg(expr(s"sum(s * weight) div $kd").as("v"))
-        .select(col("dst").as("node"), col("v"))
-      x.select("node")
-        .join(inc, Seq("node"), "left")
-        .select(col("node"),
-          (lit(1000000L) + coalesce(col("v"), lit(0L))).as("s"))
-    }
-    x.select(col("node").as("name"),
-        round(col("s") / lit(1e6), 6).as("katz"))
-      .orderBy(col("katz").desc, col("name"))
+    kd
   }
+
+  /** (node, s) on the 10⁶ grid over a barriered (src, dst, weight)
+    * edge list.
+    */
+  private[graft] val katzScores = Loops.Plans(
+    local = (spark, rows) => {
+      val es = Loops.triples(rows)
+      val wd = es.groupMapReduce(_._1)(_._3)(_ + _)
+      val kd = katzDivisor(if (wd.isEmpty) 0L else wd.values.max)
+      var x = wd.map { case (n, _) => n -> 1000000L }
+      for (_ <- 1 to KatzIters) {
+        val acc = mutable.HashMap.empty[String, Long]
+        for ((s, d, w) <- es; v <- x.get(s)) acc(d) = acc.getOrElse(d, 0L) + v * w
+        x = x.map { case (n, _) => n -> (1000000L + acc.get(n).fold(0L)(_ / kd)) }
+      }
+      driverFrame(spark, "node STRING, s BIGINT", x.map { case (n, v) => Row(n, v) })
+    },
+    distributed = e => {
+      val maxWd = Option(
+        e.groupBy("src").agg(sum("weight").cast("long").as("wd"))
+          .agg(max(col("wd"))).first().getAs[java.lang.Long](0))
+        .fold(0L)(_.longValue())
+      val kd = katzDivisor(maxWd)
+      val x0 = e.select(col("src").as("node")).distinct()
+        .withColumn("s", lit(1000000L))
+      Loops.iterate(x0, KatzIters, every = 2, eager = true) { x =>
+        val inc = x.select(col("node").as("src"), col("s"))
+          .join(e, "src")
+          .groupBy("dst")
+          .agg(expr(s"sum(s * weight) div $kd").as("v"))
+          .select(col("dst").as("node"), col("v"))
+        x.select("node")
+          .join(inc, Seq("node"), "left")
+          .select(col("node"),
+            (lit(1000000L) + coalesce(col("v"), lit(0L))).as("s"))
+      }
+    })
 
   /** The same rounds unrolled as CTEs — identical integer floors,
     * identical data-derived divisor (kdv replays the Scala pre-pass
@@ -289,18 +352,30 @@ object Analytics {
     * per-edge share is weight/wdeg with the weighted degree joined
     * once from the degree table.
     */
-  def qPagerankWeighted(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).barrier()
-    val deg = e.groupBy("src")
-      .agg(sum(col("weight")).cast("long").as("wd")).barrier()
-    val n = deg.count()
-    val pr = Loops.powerIterate(
-      deg.select(col("src").as("node"), lit(1.0 / n).as("rank")), e, deg,
-      share = col("rank") * col("weight") / col("wd"),
-      teleport = lit((1.0 - Damping) / n), damping = Damping, rounds = PrIters, every = 3, eager = true)
-    pr.select(col("node").as("name"), round(col("rank"), 6).as("wpagerank"))
+  def qPagerankWeighted(spark: SparkSession, dir: String): DataFrame =
+    wpagerankRanks(edges(spark, dir).barrier())
+      .select(col("node").as("name"), round(col("rank"), 6).as("wpagerank"))
       .orderBy(col("wpagerank").desc, col("name"))
-  }
+
+  /** (node, rank) over a barriered (src, dst, weight) edge list. */
+  private[graft] val wpagerankRanks = Loops.Plans(
+    local = (spark, rows) => {
+      val es = Loops.triples(rows)
+      val wd = es.groupMapReduce(_._1)(_._3)(_ + _)
+      val n = wd.size.toLong
+      rankFrame(spark, Loops.powerIterateLocal(es.map(t => (t._1, t._2)), wd.keys,
+        _ => 1.0 / n, (r, i) => r * es(i)._3.toDouble / wd(es(i)._1).toDouble,
+        _ => (1.0 - Damping) / n, Damping, PrIters))
+    },
+    distributed = e => {
+      val deg = e.groupBy("src")
+        .agg(sum(col("weight")).cast("long").as("wd")).barrier()
+      val n = deg.count()
+      Loops.powerIterate(
+        deg.select(col("src").as("node"), lit(1.0 / n).as("rank")), e, deg,
+        share = col("rank") * col("weight") / col("wd"),
+        teleport = lit((1.0 - Damping) / n), damping = Damping, rounds = PrIters, every = 3, eager = true)
+    })
 
   private def wpagerankSql: String = {
     val iters = (1 to PrIters).map { i =>
@@ -325,11 +400,17 @@ object Analytics {
     * propagation (label = lexicographic min entity name reachable).
     */
   def qComponents(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).select("src", "dst").barrier()
-    Loops.minLabel(e, CcIters, every = 3, eager = true)
+    componentLabels(edges(spark, dir).select("src", "dst").barrier())
       .select(col("node").as("name"), col("comp"))
       .orderBy("name")
   }
+
+  /** (node, comp) over a barriered (src, dst) edge list. */
+  private[graft] val componentLabels = Loops.Plans(
+    local = (spark, rows) => driverFrame(spark, "node STRING, comp STRING",
+      Loops.minLabelLocal(Loops.pairs(rows), CcIters, Loops.Utf8)
+        .map { case (n, c) => Row(n, c) }),
+    distributed = e => Loops.minLabel(e, CcIters, every = 3, eager = true))
 
   val LpaIters = 4
   val LpaSeeds = 8
@@ -355,8 +436,7 @@ object Analytics {
     * checkpointed every 2 rounds.
     */
   def qLpaCommunities(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).barrier(false)
-    val fin = lpaLabels(e)
+    val fin = lpaCommunities(edges(spark, dir).barrier(false))
     val sizes = fin.groupBy("community").agg(count(lit(1)).as("community_size"))
     fin.join(sizes, "community")
       .select(col("node").as("name"), col("community"), col("community_size"))
@@ -369,7 +449,7 @@ object Analytics {
     * `edges` for the weight rollups and again inside the community
     * call: two full mentions scans for one query).
     */
-  private def lpaLabels(e: DataFrame): DataFrame = {
+  private[graft] def lpaLabels(e: DataFrame): DataFrame = {
     val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
     val seeds = deg.orderBy(col("d").desc, col("src")).limit(LpaSeeds)
       .select(col("src").as("node"), col("src").as("slbl"))
@@ -394,6 +474,39 @@ object Analytics {
     }
     lbl.select(col("node"), coalesce(col("lbl"), col("node")).as("community"))
   }
+
+  /** [[lpaLabels]] on the driver over (src, dst, weight) edges: node →
+    * community. Seeds and vote ties break in Spark's string order.
+    */
+  private[graft] def lpaLabelsLocal(es: Seq[(String, String, Long)]): Map[String, String] = {
+    val seeds = es.groupMapReduce(_._1)(_ => 1L)(_ + _).toSeq
+      .sorted(Ordering.Tuple2(Ordering.Long.reverse, Loops.Utf8).on[(String, Long)](p => (p._2, p._1)))
+      .take(LpaSeeds).map(_._1).toSet
+    var lbl: Map[String, String] =
+      es.map(_._1).distinct.map(n => n -> (if (seeds(n)) n else null)).toMap
+    for (_ <- 1 to LpaIters) {
+      val votes = mutable.HashMap.empty[(String, String), Long]
+      for ((s, d, w) <- es; l <- lbl.get(s) if l != null)
+        votes((d, l)) = votes.getOrElse((d, l), 0L) + w
+      // heaviest label, ties to the least: min(struct(-c, l))
+      val best = mutable.HashMap.empty[String, (Long, String)]
+      for (((d, l), c) <- votes) best.get(d) match {
+        case Some((bc, bl)) if bc > c || (bc == c && Loops.Utf8.lteq(bl, l)) =>
+        case _ => best(d) = (c, l)
+      }
+      lbl = lbl.map { case (n, l) =>
+        n -> (if (seeds(n)) n else best.get(n).fold(l)(_._2)) }
+    }
+    lbl.map { case (n, l) => n -> (if (l == null) n else l) }
+  }
+
+  /** (node, community) over a barriered (src, dst, weight) edge list. */
+  private[graft] val lpaCommunities = Loops.Plans(
+    local = (spark, rows) => communityFrame(spark, lpaLabelsLocal(Loops.triples(rows))),
+    distributed = lpaLabels)
+
+  private def communityFrame(spark: SparkSession, com: Iterable[(String, String)]): DataFrame =
+    driverFrame(spark, "node STRING, community STRING", com.map { case (n, c) => Row(n, c) })
 
   /** LPA CTE chain up to the final (node, community) table — shared
     * by the lpa oracle and the modularity oracle.
@@ -450,8 +563,9 @@ object Analytics {
     */
   def qModularity(spark: SparkSession, dir: String): DataFrame = {
     val e = edges(spark, dir).barrier(false)
-    val com = lpaLabels(e)
-      .barrier(false) // read by both endpoint joins
+    val com = Loops.onDriver(e)(lpaCommunities.local(spark, _)) {
+      lpaLabels(e).barrier(false) // read by both endpoint joins
+    }
     modularityBreakdown(e, com)
   }
 
@@ -559,99 +673,89 @@ object Analytics {
     * k_super = Σ k_member, so the micro-grid gain formula is
     * level-agnostic); the coarse pass costs #communities-sized
     * rounds, asymptotically free next to phase 1.
+    *
+    * An edge list within Loops.DriverMaxEdges runs both phases, the
+    * LPA start and the contraction on the driver. A larger one runs
+    * phase 1 distributed and picks phase 2's plan from the contracted
+    * graph's size under the same bound.
     */
-  /** Coarse graphs up to this many super-EDGES run phase 2 on the
-    * driver (one collect of a #communities-sized table — the bounded-
-    * side seam PQ/IVF training also uses): the distributed loop's
-    * per-round stage latency dwarfs the actual work when the
-    * contracted graph is thousands of rows (measured: +5 s at sf0.1
-    * for a ~dozens-node coarse graph). Beyond the bound — millions of
-    * communities — the identical distributed loop runs instead; both
-    * paths compute the same exact-integer recurrence, spec-proved
-    * equal, so the oracle never sees which one ran.
-    */
-  val CoarseDriverMaxEdges = 200000L
-
-  private[graft] def louvainLabels(e: DataFrame): DataFrame = {
-    val com1 = louvainMoveRounds(e, lpaLabels(e), LouvainRounds)
-      .barrier(false) // read by the contraction AND the mapback
-    val superE = e
-      .join(com1.select(col("node").as("src"), col("community").as("cs")), "src")
-      .join(com1.select(col("node").as("dst"), col("community").as("cd")), "dst")
-      .groupBy(col("cs").as("src"), col("cd").as("dst"))
-      .agg(sum("weight").cast("long").as("weight"))
-      .barrier(false)
-    val spark = e.sparkSession
-    val nSuperEdges = superE.count()
-    val com2 =
-      if (nSuperEdges <= CoarseDriverMaxEdges) {
-        val edges = superE.collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        val fin = louvainMoveRoundsLocal(edges, Louvain2Rounds)
-        import spark.implicits._
-        fin.toSeq.toDF("c1", "community")
-      } else {
+  private[graft] val louvainLabels = Loops.Plans(
+    local = (spark, rows) => {
+      val es = Loops.triples(rows)
+      val com1 = louvainMoveRoundsLocal(es, lpaLabelsLocal(es), LouvainRounds)
+      val superE = es.filter(t => com1.contains(t._1) && com1.contains(t._2))
+        .groupMapReduce(t => (com1(t._1), com1(t._2)))(_._3)(_ + _)
+        .map { case ((cs, cd), w) => (cs, cd, w) }.toSeq
+      val com2 = louvainMoveRoundsLocal(superE, identityPartition(superE), Louvain2Rounds)
+      communityFrame(spark, com1.flatMap { case (n, c1) => com2.get(c1).map(n -> _) })
+    },
+    distributed = e => {
+      val com1 = louvainMoveRounds(e, lpaLabels(e), LouvainRounds)
+        .barrier(false) // read by the contraction AND the mapback
+      val superE = e
+        .join(com1.select(col("node").as("src"), col("community").as("cs")), "src")
+        .join(com1.select(col("node").as("dst"), col("community").as("cd")), "dst")
+        .groupBy(col("cs").as("src"), col("cd").as("dst"))
+        .agg(sum("weight").cast("long").as("weight"))
+        .barrier(false)
+      // the contracted graph is #communities-sized: usually in bound
+      // even when the entity graph is not
+      val com2 = Loops.onDriver(superE) { rows =>
+        val se = Loops.triples(rows)
+        communityFrame(e.sparkSession,
+          louvainMoveRoundsLocal(se, identityPartition(se), Louvain2Rounds))
+      } {
         val init2 = superE.select(col("src").as("node")).distinct()
           .withColumn("community", col("node"))
         louvainMoveRounds(superE, init2, Louvain2Rounds)
-          .select(col("node").as("c1"), col("community"))
       }
-    com1.select(col("node"), col("community").as("c1"))
-      .join(broadcast(com2), "c1")
-      .select("node", "community")
-  }
+      com1.select(col("node"), col("community").as("c1"))
+        .join(broadcast(com2.select(col("node").as("c1"), col("community"))), "c1")
+        .select("node", "community")
+    })
 
-  /** UTF-8 byte order — Spark compares strings as binary UTF-8, and
-    * the local coarse phase must break gain ties exactly like the
-    * distributed struct-min (JVM String ordering diverges on
-    * supplementary characters).
-    */
-  private def utf8Less(a: String, b: String): Boolean = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length < y.length
-  }
+  /** Every source node of `es` in its own community. */
+  private def identityPartition(es: Seq[(String, String, Long)]): Map[String, String] =
+    es.map(t => t._1 -> t._1).toMap
 
   /** The SAME synchronized move recurrence as [[louvainMoveRounds]],
     * executed on the driver over a collected (bounded) edge list from
-    * the identity partition — pure exact-integer arithmetic (every
+    * the partition `init` — pure exact-integer arithmetic (every
     * dividend nonnegative, so JVM `/` matches Spark `div` and DuckDB
-    * `//`), ties → stay / smallest community by UTF-8 order.
-    * Spec-proved equal to the distributed loop.
+    * `//`), ties → stay / smallest community in Spark's string order.
+    * As in the joins, a node keeps a label only if it has edges, and
+    * only edges into labelled nodes vote. Spec-proved equal to the
+    * distributed loop.
     */
-  private[graft] def louvainMoveRoundsLocal(
-      edges: Array[(String, String, Long)], rounds: Int): Map[String, String] = {
+  private[graft] def louvainMoveRoundsLocal(edges: Seq[(String, String, Long)],
+      init: Map[String, String], rounds: Int): Map[String, String] = {
     if (edges.isEmpty) return Map.empty
-    val kdeg = edges.groupBy(_._1).map { case (n, es) => n -> es.map(_._3).sum }
+    val kdeg = edges.groupMapReduce(_._1)(_._3)(_ + _)
     val tw = edges.map(_._3).sum
-    var com: Map[String, String] = kdeg.keys.map(n => n -> n).toMap
+    var com = init
     for (_ <- 1 to rounds) {
       val cur = com
-      val tot = cur.toSeq.groupBy(_._2)
-        .map { case (c, ns) => c -> ns.map(p => kdeg(p._1)).sum }
-      val wic = edges.groupBy(ed => (ed._1, cur(ed._2)))
-        .map { case (key, es) => key -> es.map(_._3).sum }
+      val tot = cur.toSeq.filter(p => kdeg.contains(p._1))
+        .groupMapReduce(_._2)(p => kdeg(p._1))(_ + _)
+      val wic = edges.filter(ed => cur.contains(ed._2))
+        .groupMapReduce(ed => (ed._1, cur(ed._2)))(_._3)(_ + _)
       val byNode = wic.toSeq.groupBy(_._1._1)
       def gainOf(node: String, c: String, w: Long): Long = {
         val k = kdeg(node)
-        val totAdj = tot.getOrElse(c, 0L) - (if (c == cur(node)) k else 0L)
+        val totAdj = tot(c) - (if (c == cur(node)) k else 0L)
         w * 1000000L / tw -
           ((k * 1000000L / tw) * (totAdj * 1000000L / tw)) / 1000000L
       }
-      com = cur.map { case (node, c0) =>
+      com = cur.filter(p => kdeg.contains(p._1)).map { case (node, c0) =>
         val stayGain = gainOf(node, c0, wic.getOrElse((node, c0), 0L))
         var bestC: String = null
         var bestGain = Long.MinValue
         byNode.getOrElse(node, Seq.empty).foreach { case ((_, c), w) =>
-          val g = gainOf(node, c, w)
-          if (g > bestGain || (g == bestGain && utf8Less(c, bestC)))
-            { bestGain = g; bestC = c }
+          if (tot.contains(c)) {
+            val g = gainOf(node, c, w)
+            if (g > bestGain || (g == bestGain && Loops.Utf8.lt(c, bestC)))
+              { bestGain = g; bestC = c }
+          }
         }
         node -> (if (bestC != null && bestGain > stayGain) bestC else c0)
       }
@@ -893,12 +997,18 @@ object Analytics {
     * stops when the frontier empties).
     */
   def qShortestPath(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).select("src", "dst").barrier()
-    Loops.relaxMin(e, "src", "dst", BfsSeed, zero = lit(0), len = lit(1),
-        rounds = BfsHops, every = 3, eager = true)
+    hopDistances(edges(spark, dir).select("src", "dst").barrier())
       .select(col("node").as("name"), col("dist"))
       .orderBy("dist", "name")
   }
+
+  /** (node, dist INT) from BfsSeed over a barriered (src, dst) edge list. */
+  private[graft] val hopDistances = Loops.Plans(
+    local = (spark, rows) => driverFrame(spark, "node STRING, dist INT",
+      Loops.relaxMinLocal(Loops.pairs(rows).map(p => (p._1, p._2, 1L)), BfsSeed, BfsHops)
+        .map { case (n, d) => Row(n, d.toInt) }),
+    distributed = e => Loops.relaxMin(e, "src", "dst", BfsSeed, zero = lit(0), len = lit(1),
+      rounds = BfsHops, every = 3, eager = true))
 
   val WspRounds = 6 // Bellman-Ford relaxation rounds (≥ graph diameter here)
 
@@ -926,11 +1036,20 @@ object Analytics {
     val e = edges(spark, dir)
       .selectExpr("src", "dst", "1000000 div weight AS cost")
       .barrier()
-    Loops.relaxMin(e, "src", "dst", BfsSeed, zero = lit(0L), len = col("cost"),
-        rounds = WspRounds, every = 3, eager = true)
+    costDistances(e)
       .select(col("node").as("name"), col("dist").as("wdist"))
       .orderBy("wdist", "name")
   }
+
+  /** (node, dist BIGINT) from BfsSeed over a barriered (src, dst, cost)
+    * edge list.
+    */
+  private[graft] val costDistances = Loops.Plans(
+    local = (spark, rows) => driverFrame(spark, "node STRING, dist BIGINT",
+      Loops.relaxMinLocal(Loops.triples(rows), BfsSeed, WspRounds)
+        .map { case (n, d) => Row(n, d) }),
+    distributed = e => Loops.relaxMin(e, "src", "dst", BfsSeed, zero = lit(0L),
+      len = col("cost"), rounds = WspRounds, every = 3, eager = true))
 
   val PprAlpha = 0.15 // restart probability back to the seed
 
@@ -944,19 +1063,32 @@ object Analytics {
     * rank 0 and are dropped. Fixed PrIters rounds, replayed exactly
     * by the unrolled-CTE oracle.
     */
-  def qPagerankPersonalized(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).select("src", "dst").barrier()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("d")).barrier()
-    val pr = Loops.powerIterate(
-      deg.select(col("src").as("node"))
-        .withColumn("rank", when(col("node") === BfsSeed, 1.0).otherwise(0.0)),
-      e, deg, share = col("rank") / col("d"),
-      teleport = when(col("node") === BfsSeed, lit(PprAlpha)).otherwise(lit(0.0)),
-      damping = 1.0 - PprAlpha, rounds = PrIters, every = 3, eager = true)
-    pr.filter(col("rank") > 0)
+  def qPagerankPersonalized(spark: SparkSession, dir: String): DataFrame =
+    pprRanks(edges(spark, dir).select("src", "dst").barrier())
+      .filter(col("rank") > 0)
       .select(col("node").as("name"), round(col("rank"), 6).as("ppr"))
       .orderBy(col("ppr").desc, col("name"))
-  }
+
+  /** (node, rank) of the walk restarting at BfsSeed over a barriered
+    * (src, dst) edge list.
+    */
+  private[graft] val pprRanks = Loops.Plans(
+    local = (spark, rows) => {
+      val es = Loops.pairs(rows)
+      val d = es.groupMapReduce(_._1)(_ => 1L)(_ + _)
+      rankFrame(spark, Loops.powerIterateLocal(es, d.keys,
+        n => if (n == BfsSeed) 1.0 else 0.0, (r, i) => r / d(es(i)._1).toDouble,
+        n => if (n == BfsSeed) PprAlpha else 0.0, 1.0 - PprAlpha, PrIters))
+    },
+    distributed = e => {
+      val deg = e.groupBy("src").agg(count(lit(1)).as("d")).barrier()
+      Loops.powerIterate(
+        deg.select(col("src").as("node"))
+          .withColumn("rank", when(col("node") === BfsSeed, 1.0).otherwise(0.0)),
+        e, deg, share = col("rank") / col("d"),
+        teleport = when(col("node") === BfsSeed, lit(PprAlpha)).otherwise(lit(0.0)),
+        damping = 1.0 - PprAlpha, rounds = PrIters, every = 3, eager = true)
+    })
 
   private def pprSql: String = {
     val iters = (1 to PrIters).map { i =>

@@ -1,11 +1,12 @@
 package graft.operators
 
 import graft.Ckpt.BarrierOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
+import graft.graph.Loops
 
 /** Deduplication family for training-data pipelines: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, embedding-cosine.
@@ -830,16 +831,26 @@ object Dedup {
     * (pairs-sized) dup set, not the corpus. Shared by qDedupClusters
     * and Curation's near-duplicate signal.
     */
-  private[operators] def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
+  private[operators] def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+    dupLabels(dupEdges(spark, dir))
+
+  /** Both directions of the verified near-dup pairs: (src, dst). */
+  private[graft] def dupEdges(spark: SparkSession, dir: String): DataFrame = {
     // materialize the (tiny) pair list ONCE — both union branches and
     // every propagation round read the checkpoint, not the LSH pipeline
     val pairs = qDedupMinhash(spark, dir)
       .select("doc_id_a", "doc_id_b").barrier()
-    val edges = pairs
+    pairs
       .union(pairs.select(col("doc_id_b").as("doc_id_a"), col("doc_id_a").as("doc_id_b")))
       .toDF("src", "dst")
-    graft.graph.Loops.minLabel(edges, ClusterIters, every = 3, eager = true)
   }
+
+  /** (node, comp) over a (src, dst) doc-id edge list. */
+  private[graft] val dupLabels = Loops.Plans(
+    local = (spark, rows) => Loops.frame(spark, "node BIGINT, comp BIGINT",
+      Loops.minLabelLocal(rows.map(r => (r.getLong(0), r.getLong(1))), ClusterIters,
+        Ordering.Long).map { case (n, c) => Row(n, c) }),
+    distributed = Loops.minLabel(_, ClusterIters, every = 3, eager = true))
 
   def qDedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val lbl = clusterLabels(spark, dir)

@@ -14,51 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class DirtyDataSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_dirty").toString
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("text", StringType, nullable = true),
-      StructField("lang", StringType, nullable = true),
-      StructField("source", StringType, nullable = true),
-      StructField("n_chars", LongType, nullable = false)))
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    def add(id: Long, t: String, l: String, s: String): Unit =
-      rows.add(org.apache.spark.sql.Row(id, t,
-        l, s, if (t == null) 0L else t.length.toLong))
-    add(1L, "a perfectly ordinary document about spark clusters", "en", "a")
-    add(2L, null, "en", "a")               // NULL text
-    add(3L, "", "en", "b")                 // empty
-    add(4L, "   ", "en", "b")              // whitespace only
-    add(5L, "émoji 🎉 naïve Ωmega ﬃ", "de", "c") // unicode
-    add(6L, "repeated repeated repeated repeated", null, null) // null keys
-    add(7L, "a perfectly ordinary document about spark clusters", "en", "c")
-    spark.createDataFrame(rows, schema)
-      .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    // dirty embeddings beside the dirty documents (round 10): the
-    // vector CALL expands its top-k seed through BOTH tables, so its
-    // dirty row needs vectors here — null / empty / wrong-dim / zero /
-    // NaN rows that the vectors() choke point must screen
-    val embSchema = StructType(Seq(
-      StructField("vec_id", LongType, nullable = false),
-      StructField("embedding", org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, containsNull = true), nullable = true),
-      StructField("label", org.apache.spark.sql.types.IntegerType, nullable = false)))
-    val em = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    def vec(id: Long, v: Seq[Float], l: Int): Unit =
-      em.add(org.apache.spark.sql.Row(id, v, l))
-    vec(0L, Seq.tabulate(operators.Similarity.Dim)(i => (i % 7).toFloat / 7f), 0)
-    vec(1L, Seq.tabulate(operators.Similarity.Dim)(i => (i % 5).toFloat / 5f), 1)
-    vec(2L, null, 0)                       // NULL embedding
-    vec(3L, Seq.empty[Float], 1)           // empty vector
-    vec(4L, Seq(1f, 2f, 3f), 0)            // wrong dimension
-    vec(5L, Seq.tabulate(operators.Similarity.Dim)(_ => 0f), 1) // zero norm
-    vec(6L, Seq.tabulate(operators.Similarity.Dim)(
-      i => if (i == 0) Float.NaN else 0.5f), 0) // NaN component
-    spark.createDataFrame(em, embSchema)
-      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-    d
-  }
+  private lazy val dir: String = DirtyData.dir
 
   private def runs(name: String)(df: => org.apache.spark.sql.DataFrame): Unit =
     test(s"$name survives null/empty/unicode documents") {
@@ -246,5 +202,58 @@ class DirtyDataSpec extends AnyFunSuite {
       s"unexpected first merges: ${merged.toSeq}")
     // rounds 3+ keep training on the still-splittable words
     assert(merged.drop(2).forall(m => !m.contains("zq</w>")))
+  }
+}
+
+/** The dirty fixture, shared with the specs that replay its graph. */
+object DirtyData {
+  /** A documents dir with NULL, empty, whitespace-only and unicode
+    * rows, and dirty embeddings beside it.
+    */
+  lazy val dir: String = {
+    val spark = TestSpark.spark
+    val d = java.nio.file.Files.createTempDirectory("graft_dirty").toString
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("text", StringType, nullable = true),
+      StructField("lang", StringType, nullable = true),
+      StructField("source", StringType, nullable = true),
+      StructField("n_chars", LongType, nullable = false)))
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    def add(id: Long, t: String, l: String, s: String): Unit =
+      rows.add(org.apache.spark.sql.Row(id, t,
+        l, s, if (t == null) 0L else t.length.toLong))
+    add(1L, "a perfectly ordinary document about spark clusters", "en", "a")
+    add(2L, null, "en", "a")               // NULL text
+    add(3L, "", "en", "b")                 // empty
+    add(4L, "   ", "en", "b")              // whitespace only
+    add(5L, "émoji 🎉 naïve Ωmega ﬃ", "de", "c") // unicode
+    add(6L, "repeated repeated repeated repeated", null, null) // null keys
+    add(7L, "a perfectly ordinary document about spark clusters", "en", "c")
+    spark.createDataFrame(rows, schema)
+      .write.mode("overwrite").parquet(s"$d/documents.parquet")
+    // dirty embeddings beside the dirty documents (round 10): the
+    // vector CALL expands its top-k seed through BOTH tables, so its
+    // dirty row needs vectors here — null / empty / wrong-dim / zero /
+    // NaN rows that the vectors() choke point must screen
+    val embSchema = StructType(Seq(
+      StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType, containsNull = true), nullable = true),
+      StructField("label", org.apache.spark.sql.types.IntegerType, nullable = false)))
+    val em = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    def vec(id: Long, v: Seq[Float], l: Int): Unit =
+      em.add(org.apache.spark.sql.Row(id, v, l))
+    vec(0L, Seq.tabulate(operators.Similarity.Dim)(i => (i % 7).toFloat / 7f), 0)
+    vec(1L, Seq.tabulate(operators.Similarity.Dim)(i => (i % 5).toFloat / 5f), 1)
+    vec(2L, null, 0)                       // NULL embedding
+    vec(3L, Seq.empty[Float], 1)           // empty vector
+    vec(4L, Seq(1f, 2f, 3f), 0)            // wrong dimension
+    vec(5L, Seq.tabulate(operators.Similarity.Dim)(_ => 0f), 1) // zero norm
+    vec(6L, Seq.tabulate(operators.Similarity.Dim)(
+      i => if (i == 0) Float.NaN else 0.5f), 0) // NaN component
+    spark.createDataFrame(em, embSchema)
+      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    d
   }
 }

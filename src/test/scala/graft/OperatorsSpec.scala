@@ -683,24 +683,30 @@ class OperatorsSpec extends AnyFunSuite {
     assert(mapped.select("c1", "community").distinct().count() ==
       mapped.select("c1").distinct().count(),
       "phase 2 split a phase-1 community")
-    // the driver-side coarse path (taken when the contracted graph is
-    // small) must equal the distributed loop BIT-FOR-BIT — same
-    // exact-integer recurrence, same stay/tie rules
+    // the driver-side move rounds (taken when the edge list is within
+    // Loops.DriverMaxEdges) must equal the distributed loop BIT-FOR-BIT
+    // at both levels — same exact-integer recurrence, same stay/tie
+    // rules — from phase 1's LPA partition and phase 2's identity one
+    def sameMoves(edges: org.apache.spark.sql.DataFrame, init: org.apache.spark.sql.DataFrame,
+        rounds: Int, phase: String): Unit = {
+      val localPath = Analytics.louvainMoveRoundsLocal(
+        edges.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq,
+        init.collect().map(r => r.getString(0) -> r.getString(1)).toMap, rounds)
+      val distPath = Analytics.louvainMoveRounds(edges, init, rounds)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(localPath == distPath,
+        s"driver-side $phase diverged from the distributed loop")
+    }
+    sameMoves(e, Analytics.lpaLabels(e), Analytics.LouvainRounds, "phase 1")
     val superE = e
       .join(moveOnly.select(col("node").as("src"), col("community").as("cs")), "src")
       .join(moveOnly.select(col("node").as("dst"), col("community").as("cd")), "dst")
       .groupBy(col("cs").as("src"), col("cd").as("dst"))
       .agg(sum("weight").cast("long").as("weight"))
       .localCheckpoint(false)
-    val localPath = Analytics.louvainMoveRoundsLocal(
-      superE.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))),
-      Analytics.Louvain2Rounds)
     val init2 = superE.select(col("src").as("node")).distinct()
       .withColumn("community", col("node"))
-    val distPath = Analytics.louvainMoveRounds(superE, init2, Analytics.Louvain2Rounds)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(localPath == distPath,
-      s"driver-side coarse phase diverged from the distributed loop")
+    sameMoves(superE, init2, Analytics.Louvain2Rounds, "coarse phase")
   }
 
   test("sq8 ANN: every returned score recomputes from first-principles int8 codes") {
