@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, unix_micros}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
@@ -26,7 +26,7 @@ object Tables {
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val key = versionKey(spark, path)
+    val key = tableVersion(spark, path)
     Option(schemas.get(path)).filter(e => key.contains(e._1)) match {
       case Some((_, schema)) => spark.read.schema(schema).parquet(path)
       case None =>
@@ -36,7 +36,10 @@ object Tables {
     }
   }
 
-  private type VersionKey = (Seq[(String, Long, Long)], Map[String, String])
+  /** A version of some files under some session confs: (path, length,
+    * modification time) of every file, sorted, and the selected confs.
+    */
+  private[graft] type VersionKey = (Seq[(String, Long, Long)], Map[String, String])
 
   /** path → (version key, schema inferred under it); one entry per path. */
   private val schemas =
@@ -47,18 +50,34 @@ object Tables {
     Seq("spark.sql.parquet.", "spark.sql.legacy.parquet.", "spark.sql.files.",
       "spark.sql.caseSensitive")
 
-  private def versionKey(spark: SparkSession, path: String): Option[VersionKey] = {
+  /** The version of `files` under the session confs whose names
+    * `conf` accepts. Shared by the schema memo here and the edge-list
+    * memo of `graph.Loops`.
+    */
+  private[graft] def versionKey(spark: SparkSession, files: Seq[FileStatus],
+      conf: String => Boolean): VersionKey =
+    (files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted,
+      spark.conf.getAll.filter { case (k, _) => conf(k) })
+
+  /** The version of the parquet table at `path`: every file under it
+    * and the parquet-reading confs; None when it cannot be listed.
+    */
+  private def tableVersion(spark: SparkSession, path: String): Option[VersionKey] = {
     val p = new Path(path)
-    try {
-      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
-      val confs = spark.conf.getAll.filter { case (k, _) => SchemaConfPrefixes.exists(k.startsWith) }
-      Some((files, confs))
-    } catch {
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try Some(versionKey(spark, leafFiles(fs, p), k => SchemaConfPrefixes.exists(k.startsWith)))
+    catch {
       case _: java.io.IOException => None
     }
   }
+
+  /** The files under `p` by a `listStatus` walk. `listFiles` would build
+    * a `LocatedFileStatus` per file, which on a local file system
+    * without native Hadoop loads the file's permission by forking
+    * `ls -ld`; a plain status loads it only when asked.
+    */
+  private def leafFiles(fs: FileSystem, p: Path): Seq[FileStatus] =
+    fs.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) leafFiles(fs, s.getPath) else Seq(s))
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")

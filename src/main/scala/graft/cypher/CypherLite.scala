@@ -2796,24 +2796,25 @@ object CypherLite {
     * relationship supports it (pathKernel checks).
     *
     * An edge list within Loops.DriverMaxEdges relaxes on the driver
-    * ([[uidDistances]]). A larger one cuts the loop state with eager
-    * barriers: the first read of a lazily cut state can run inside a
-    * broadcast exchange while adaptive execution submits a map stage
-    * over the same RDD, and that pair once deadlocked the DAG
-    * scheduler on the checkpoint's lock.
+    * ([[uidDistances]]), and a repeated call on unchanged tables reads
+    * its rows from the memo of `Loops.onDriver`. A larger one cuts the
+    * loop state with eager barriers: the first read of a lazily cut
+    * state can run inside a broadcast exchange while adaptive
+    * execution submits a map stage over the same RDD, and that pair
+    * once deadlocked the DAG scheduler on the checkpoint's lock.
     */
   private def spDistance(weighted: Boolean): PathKernel = (spark, dir, c) => {
     val e = if (!weighted) edges(spark, dir, c.rel, c.dstLabel)
       else edgesWithProps(spark, dir, c.rel, None)
         .selectExpr("src_uid", "dst_uid", "1000000 div weight AS cost")
     val atDst = col("node") === c.dstUid
-    (uidDistances(c.srcUid, c.hi, weighted)(e.barrier(false))
+    (uidDistances(c.srcUid, c.hi, weighted)(e, _.barrier(false))
       .filter(if (weighted) atDst else atDst && col("dist") >= c.lo),
       Map((if (weighted) "wlength(p)" else "length(p)") -> col("dist")))
   }
 
   /** (node, dist BIGINT) from `seed` within `rounds` relaxations over a
-    * barriered (src_uid, dst_uid) edge list of unit hops or, when
+    * (src_uid, dst_uid) edge list of unit hops or, when
     * `weighted`, a (src_uid, dst_uid, cost) one.
     */
   private[graft] def uidDistances(seed: String, rounds: Int, weighted: Boolean) = Loops.Plans(

@@ -10,16 +10,20 @@ import graft.operators.TextPipeline
 
 /** Graph analytics over the entity co-occurrence graph — the "GraphX
   * for analytics, bulk queries" half of the north star. Each loop
-  * query builds and barriers its edge list, then runs one of two plans
-  * (`Loops.Plans`), picked by the edge list's size:
+  * query builds its edge list and hands it, with the barrier that cuts
+  * it, to one of two plans (`Loops.Plans`), picked by the edge list's
+  * size:
   *
-  *  - within `Loops.DriverMaxEdges` rows, one job collects the edge
-  *    list and every pre-pass (degrees, node count, Katz's divisor,
-  *    LPA's seeds) and every round runs on the driver; the result is a
-  *    local relation the query's final projection and ordering read.
-  *    A distributed round costs several Spark jobs of 20–35 ms for a
-  *    few thousand rows of work, so this is what a news-sized entity
-  *    graph runs.
+  *  - within `Loops.DriverMaxEdges` rows, every pre-pass (degrees,
+  *    node count, Katz's divisor, LPA's seeds) and every round runs on
+  *    the driver over the list's rows; the result is a local relation
+  *    the query's final projection and ordering read. The rows come
+  *    from the memo of `Loops.onDriver` when the list's plan, its
+  *    input files and the session's confs are unchanged since an
+  *    earlier call, and otherwise from one bounded collect of the cut
+  *    list. A distributed round costs several Spark jobs of 20–35 ms
+  *    for a few thousand rows of work, so this is what a news-sized
+  *    entity graph runs.
   *  - above it, DataFrame iteration (Pregel-style power iteration)
   *    rather than RDD GraphX: each step is a shuffle-on-src join the
   *    optimizer can plan, AQE can re-balance, and the oracle can
@@ -198,11 +202,11 @@ object Analytics {
     * (no dangling mass).
     */
   def qPagerank(spark: SparkSession, dir: String): DataFrame =
-    pagerankRanks(edges(spark, dir).select("src", "dst").barrier())
+    pagerankRanks(edges(spark, dir).select("src", "dst"), _.barrier())
       .select(col("node").as("name"), round(col("rank"), 6).as("pagerank"))
       .orderBy(col("pagerank").desc, col("name"))
 
-  /** (node, rank) over a barriered (src, dst) edge list. */
+  /** (node, rank) over a (src, dst) edge list. */
   private[graft] val pagerankRanks = Loops.Plans(
     local = (spark, rows) => {
       val es = Loops.pairs(rows)
@@ -272,7 +276,7 @@ object Analytics {
     * driver-scalar pattern).
     */
   def qKatz(spark: SparkSession, dir: String): DataFrame =
-    katzScores(edges(spark, dir).barrier(false))
+    katzScores(edges(spark, dir), _.barrier(false))
       .select(col("node").as("name"), round(col("s") / lit(1e6), 6).as("katz"))
       .orderBy(col("katz").desc, col("name"))
 
@@ -285,9 +289,7 @@ object Analytics {
     kd
   }
 
-  /** (node, s) on the 10⁶ grid over a barriered (src, dst, weight)
-    * edge list.
-    */
+  /** (node, s) on the 10⁶ grid over a (src, dst, weight) edge list. */
   private[graft] val katzScores = Loops.Plans(
     local = (spark, rows) => {
       val es = Loops.triples(rows)
@@ -353,11 +355,11 @@ object Analytics {
     * once from the degree table.
     */
   def qPagerankWeighted(spark: SparkSession, dir: String): DataFrame =
-    wpagerankRanks(edges(spark, dir).barrier())
+    wpagerankRanks(edges(spark, dir), _.barrier())
       .select(col("node").as("name"), round(col("rank"), 6).as("wpagerank"))
       .orderBy(col("wpagerank").desc, col("name"))
 
-  /** (node, rank) over a barriered (src, dst, weight) edge list. */
+  /** (node, rank) over a (src, dst, weight) edge list. */
   private[graft] val wpagerankRanks = Loops.Plans(
     local = (spark, rows) => {
       val es = Loops.triples(rows)
@@ -400,12 +402,12 @@ object Analytics {
     * propagation (label = lexicographic min entity name reachable).
     */
   def qComponents(spark: SparkSession, dir: String): DataFrame = {
-    componentLabels(edges(spark, dir).select("src", "dst").barrier())
+    componentLabels(edges(spark, dir).select("src", "dst"), _.barrier())
       .select(col("node").as("name"), col("comp"))
       .orderBy("name")
   }
 
-  /** (node, comp) over a barriered (src, dst) edge list. */
+  /** (node, comp) over a (src, dst) edge list. */
   private[graft] val componentLabels = Loops.Plans(
     local = (spark, rows) => driverFrame(spark, "node STRING, comp STRING",
       Loops.minLabelLocal(Loops.pairs(rows), CcIters, Loops.Utf8)
@@ -436,7 +438,7 @@ object Analytics {
     * checkpointed every 2 rounds.
     */
   def qLpaCommunities(spark: SparkSession, dir: String): DataFrame = {
-    val fin = lpaCommunities(edges(spark, dir).barrier(false))
+    val fin = lpaCommunities(edges(spark, dir), _.barrier(false))
     val sizes = fin.groupBy("community").agg(count(lit(1)).as("community_size"))
     fin.join(sizes, "community")
       .select(col("node").as("name"), col("community"), col("community_size"))
@@ -500,7 +502,7 @@ object Analytics {
     lbl.map { case (n, l) => n -> (if (l == null) n else l) }
   }
 
-  /** (node, community) over a barriered (src, dst, weight) edge list. */
+  /** (node, community) over a (src, dst, weight) edge list. */
   private[graft] val lpaCommunities = Loops.Plans(
     local = (spark, rows) => communityFrame(spark, lpaLabelsLocal(Loops.triples(rows))),
     distributed = lpaLabels)
@@ -556,18 +558,21 @@ object Analytics {
     * agree) and the subtraction happens after, making Q exactly
     * reproducible in any engine and summation order.
     *
-    * Scale shape: the partition rides qLpaCommunities' plan; on top
-    * are two equi-joins of the edge list against the (node,
-    * community) table and two map-side-combined rollups to
-    * #communities rows; the 1-row total weight is a broadcast cross.
+    * Scale shape: an edge list within Loops.DriverMaxEdges computes
+    * the partition and the breakdown on the driver from the same rows,
+    * so the audit adds no job to the loop it audits. Above the bound
+    * the partition rides qLpaCommunities' distributed plan; on top are
+    * two equi-joins of the edge list against the (node, community)
+    * table and two map-side-combined rollups to #communities rows; the
+    * 1-row total weight is a broadcast cross.
     */
-  def qModularity(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).barrier(false)
-    val com = Loops.onDriver(e)(lpaCommunities.local(spark, _)) {
-      lpaLabels(e).barrier(false) // read by both endpoint joins
+  def qModularity(spark: SparkSession, dir: String): DataFrame =
+    Loops.onDriver(edges(spark, dir), _.barrier(false)) { rows =>
+      val es = Loops.triples(rows)
+      modularityBreakdownLocal(spark, es, lpaLabelsLocal(es))
+    } { e =>
+      modularityBreakdown(e, lpaLabels(e).barrier(false)) // read by both endpoint joins
     }
-    modularityBreakdown(e, com)
-  }
 
   /** Per-community modularity of an arbitrary (node, community)
     * partition over an edge list — shared by qModularity (LPA
@@ -585,16 +590,37 @@ object Analytics {
     val wi = wc.filter(col("cs") === col("cd"))
       .groupBy(col("cs").as("community"))
       .agg(sum("weight").cast("long").as("w_in"))
-    dt.join(wi, Seq("community"), "left")
+    modularityScores(dt.join(wi, Seq("community"), "left")
       .withColumn("w_in", coalesce(col("w_in"), lit(0L)))
-      .crossJoin(broadcast(tot))
-      .withColumn("q_micro",
+      .crossJoin(broadcast(tot)))
+  }
+
+  /** [[modularityBreakdown]] on the driver over (src, dst, weight)
+    * edges and a node → community partition.
+    */
+  private[graft] def modularityBreakdownLocal(spark: SparkSession,
+      es: Seq[(String, String, Long)], com: Map[String, String]): DataFrame = {
+    val tw = es.map(_._3).sum
+    val wc = for ((s, d, w) <- es if s != null && d != null;
+                  cs <- com.get(s); cd <- com.get(d)) yield (s, w, cs, cd)
+    val rows = wc.groupBy(_._3).map { case (c, ws) =>
+      Row(c, ws.map(_._1).distinct.size.toLong,
+        ws.filter(t => t._3 == t._4).map(_._2).sum, ws.map(_._2).sum, tw)
+    }
+    modularityScores(driverFrame(spark,
+      "community STRING, n_nodes BIGINT, w_in BIGINT, d_tot BIGINT, tw BIGINT", rows))
+  }
+
+  /** The per-community q on the integer micro-grid over (community,
+    * n_nodes, w_in, d_tot, tw) rows, one definition for both plans.
+    */
+  private def modularityScores(df: DataFrame): DataFrame =
+    df.withColumn("q_micro",
         expr("w_in * 1000000 div tw")
           - expr("((d_tot * 1000000 div tw) * (d_tot * 1000000 div tw)) div 1000000"))
       .select(col("community"), col("n_nodes"), col("w_in"), col("d_tot"),
         round(col("q_micro") / lit(1e6), 6).as("q"))
       .orderBy("community")
-  }
 
   private def modularitySql: String =
     s"""WITH $lpaCtes,
@@ -650,8 +676,7 @@ object Analytics {
     * checkpointed per round like the other iterative ops.
     */
   def qLouvain(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir).barrier(false)
-    val fin = louvainLabels(e)
+    val fin = louvainLabels(edges(spark, dir), _.barrier(false))
     val sizes = fin.groupBy("community").agg(count(lit(1)).as("community_size"))
     fin.join(sizes, "community")
       .select(col("node").as("name"), col("community"), col("community_size"))
@@ -704,7 +729,7 @@ object Analytics {
         val se = Loops.triples(rows)
         communityFrame(e.sparkSession,
           louvainMoveRoundsLocal(se, identityPartition(se), Louvain2Rounds))
-      } {
+      } { superE =>
         val init2 = superE.select(col("src").as("node")).distinct()
           .withColumn("community", col("node"))
         louvainMoveRounds(superE, init2, Louvain2Rounds)
@@ -997,12 +1022,12 @@ object Analytics {
     * stops when the frontier empties).
     */
   def qShortestPath(spark: SparkSession, dir: String): DataFrame = {
-    hopDistances(edges(spark, dir).select("src", "dst").barrier())
+    hopDistances(edges(spark, dir).select("src", "dst"), _.barrier())
       .select(col("node").as("name"), col("dist"))
       .orderBy("dist", "name")
   }
 
-  /** (node, dist INT) from BfsSeed over a barriered (src, dst) edge list. */
+  /** (node, dist INT) from BfsSeed over a (src, dst) edge list. */
   private[graft] val hopDistances = Loops.Plans(
     local = (spark, rows) => driverFrame(spark, "node STRING, dist INT",
       Loops.relaxMinLocal(Loops.pairs(rows).map(p => (p._1, p._2, 1L)), BfsSeed, BfsHops)
@@ -1033,17 +1058,13 @@ object Analytics {
     * sum ≤ (WspRounds+1)·10⁶ — no weight distribution can overflow.
     */
   def qWeightedShortestPath(spark: SparkSession, dir: String): DataFrame = {
-    val e = edges(spark, dir)
-      .selectExpr("src", "dst", "1000000 div weight AS cost")
-      .barrier()
-    costDistances(e)
+    costDistances(edges(spark, dir).selectExpr("src", "dst", "1000000 div weight AS cost"),
+      _.barrier())
       .select(col("node").as("name"), col("dist").as("wdist"))
       .orderBy("wdist", "name")
   }
 
-  /** (node, dist BIGINT) from BfsSeed over a barriered (src, dst, cost)
-    * edge list.
-    */
+  /** (node, dist BIGINT) from BfsSeed over a (src, dst, cost) edge list. */
   private[graft] val costDistances = Loops.Plans(
     local = (spark, rows) => driverFrame(spark, "node STRING, dist BIGINT",
       Loops.relaxMinLocal(Loops.triples(rows), BfsSeed, WspRounds)
@@ -1064,12 +1085,12 @@ object Analytics {
     * by the unrolled-CTE oracle.
     */
   def qPagerankPersonalized(spark: SparkSession, dir: String): DataFrame =
-    pprRanks(edges(spark, dir).select("src", "dst").barrier())
+    pprRanks(edges(spark, dir).select("src", "dst"), _.barrier())
       .filter(col("rank") > 0)
       .select(col("node").as("name"), round(col("rank"), 6).as("ppr"))
       .orderBy(col("ppr").desc, col("name"))
 
-  /** (node, rank) of the walk restarting at BfsSeed over a barriered
+  /** (node, rank) of the walk restarting at BfsSeed over a
     * (src, dst) edge list.
     */
   private[graft] val pprRanks = Loops.Plans(

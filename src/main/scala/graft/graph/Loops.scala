@@ -4,7 +4,11 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import graft.Ckpt.BarrierOps
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -17,16 +21,22 @@ import org.apache.spark.sql.types.StructType
   * directly.
   *
   * Two plans per loop, picked from the data's size (Pregelix picks
-  * each superstep's plan the same way). A loop query builds and
-  * barriers its edge list, then [[onDriver]] reads at most
-  * [[DriverMaxEdges]] + 1 rows of it in one Spark job. An edge list
-  * within the bound runs every pre-pass (degrees, node count, …) and
-  * every round on the driver — the `*Local` twins below, plain Scala
-  * over the collected rows — and comes back as a local relation for
-  * the query's final projection. At bench scale a distributed round
-  * costs several Spark jobs of 20–35 ms each for a few thousand rows
-  * of work, so a 100-node graph's loop is job latency, not compute.
-  * A larger edge list runs the distributed body.
+  * each superstep's plan the same way). A loop query hands its edge
+  * list to [[onDriver]] with the barrier that cuts it, and that reads
+  * at most [[DriverMaxEdges]] + 1 rows of the cut list in one Spark
+  * job. An edge list within the bound runs every pre-pass (degrees,
+  * node count, …) and every round on the driver — the `*Local` twins
+  * below, plain Scala over the collected rows — and comes back as a
+  * local relation for the query's final projection. At bench scale a
+  * distributed round costs several Spark jobs of 20–35 ms each for a
+  * few thousand rows of work, so a 100-node graph's loop is job
+  * latency, not compute. A larger edge list runs the distributed body
+  * over the cut list.
+  *
+  * The rows of an edge list within the bound are memoized per version
+  * of what it reads (the GDS-style projection: many loops ask one
+  * unchanged graph), so a repeated query fires no job for its edge
+  * list: see [[onDriver]].
   *
   * The distributed cadence is part of each loop's cost contract: an
   * eager barrier is one Spark job while the DataFrame is built, a lazy
@@ -69,20 +79,98 @@ private[graft] object Loops {
     if (held > bound) None else Some(parts.flatten)
   }
 
-  /** `local` over the rows of `e` when they fit [[DriverMaxEdges]],
-    * else `distributed`.
+  /** `local` over the rows of the edge list `e` when they fit
+    * [[DriverMaxEdges]], else `distributed` over `cut(e)`, where `cut`
+    * is the barrier the caller reads `e` through (identity for a list
+    * it already cut).
+    *
+    * The rows are memoized under a version key: `e`'s analyzed plan in
+    * canonical (`sameResult`) form, the files its file relations' own
+    * indexes list (path, length, modification time) and the session's
+    * SQL confs. The files are the ones the rows are read from, so a
+    * plan holding a stale listing stores its rows under that stale
+    * version, never under the files on disk. A hit runs `local` on the
+    * memoized rows and fires no Spark job; a miss cuts `e`, collects
+    * it bounded and stores the rows when they fit and the listing did
+    * not change during the collect. Only a deterministic plan whose
+    * leaves are all local relations or file relations with a listed
+    * index is memoized, so a rewrite, an append, a conf toggle or any
+    * other input changes the key; anything else (a checkpointed frame)
+    * is cut and collected every call. The memo keeps one version per
+    * plan, holds at most [[DriverMaxEdges]] rows in all and drops the
+    * least recently used list first.
     */
-  def onDriver[T](e: DataFrame)(local: Array[Row] => T)(distributed: => T): T =
-    collectBounded(e).fold(distributed)(local)
+  def onDriver[T](e: DataFrame, cut: DataFrame => DataFrame = identity)(
+      local: Array[Row] => T)(distributed: DataFrame => T): T = {
+    val key = memoKey(e)
+    key.flatMap(recall) match {
+      case Some(rows) => local(rows)
+      case None =>
+        val c = cut(e)
+        collectBounded(c) match {
+          case Some(rows) =>
+            key.filter(k => memoKey(e).contains(k)).foreach(remember(_, rows))
+            local(rows)
+          case None => distributed(c)
+        }
+    }
+  }
 
-  /** A loop's two plans over its barriered edge list `e`: `local` on
-    * the driver over the collected rows of `e`, `distributed` as Spark
-    * rounds over `e`. Both return the same rows under the same schema;
-    * `apply` picks one by the edge list's size.
+  /** An edge list's version: its canonical plan and its inputs' files
+    * and confs.
+    */
+  private type MemoKey = (LogicalPlan, Tables.VersionKey)
+
+  /** Memoized edge lists, least recently used first. */
+  private val memo = mutable.ArrayBuffer.empty[(MemoKey, Array[Row])]
+
+  /** `e`'s memo key, or None when its rows may change under one. */
+  private def memoKey(e: DataFrame): Option[MemoKey] = {
+    val plan = e.queryExecution.analyzed
+    val files = plan.collectWithSubqueries { case l: LeafNode => l }.map {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location match {
+        case index: PartitioningAwareFileIndex => Some(index.allFiles())
+        case _ => None
+      }
+      case _: LocalRelation => Some(Nil)
+      case _ => None
+    }
+    if (!plan.deterministic || files.contains(None)) None
+    else Some(plan.canonicalized ->
+      Tables.versionKey(e.sparkSession, files.flatten.flatten, _ => true))
+  }
+
+  private def recall(key: MemoKey): Option[Array[Row]] = memo.synchronized {
+    val i = memo.indexWhere(_._1 == key)
+    if (i < 0) None
+    else {
+      val hit = memo.remove(i)
+      memo += hit
+      Some(hit._2)
+    }
+  }
+
+  private def remember(key: MemoKey, rows: Array[Row]): Unit = memo.synchronized {
+    memo.filterInPlace(_._1._1 != key._1)
+    memo += key -> rows
+    while (memoRows > DriverMaxEdges) memo.remove(0)
+  }
+
+  /** Rows the memo holds. */
+  private[graft] def memoRows: Long = memo.synchronized(memo.map(_._2.length.toLong).sum)
+
+  /** Empties the memo, so a spec can measure a cold call. */
+  private[graft] def resetMemo(): Unit = memo.synchronized(memo.clear())
+
+  /** A loop's two plans over an edge list `e`: `local` on the driver
+    * over the rows of `e`, `distributed` as Spark rounds over the cut
+    * `e`. Both return the same rows under the same schema; `apply`
+    * picks one by the edge list's size ([[onDriver]]).
     */
   final case class Plans(local: (SparkSession, Array[Row]) => DataFrame,
       distributed: DataFrame => DataFrame) {
-    def apply(e: DataFrame): DataFrame = onDriver(e)(local(e.sparkSession, _))(distributed(e))
+    def apply(e: DataFrame, cut: DataFrame => DataFrame = identity): DataFrame =
+      onDriver(e, cut)(local(e.sparkSession, _))(distributed)
   }
 
   /** `rows` as a local relation with the DDL schema `ddl` (no job). */

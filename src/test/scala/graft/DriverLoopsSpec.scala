@@ -77,6 +77,19 @@ class DriverLoopsSpec extends AnyFunSuite {
       for ((g, e) <- graphs) assertSame(s"$name on $g", plans, input(e))
     }
 
+  test("modularity: the driver breakdown returns the distributed breakdown's rows and schema") {
+    for ((g, e0) <- graphs) {
+      val e = e0.barrier()
+      val es = Loops.triples(e.collect())
+      val local = Analytics.modularityBreakdownLocal(spark, es, Analytics.lpaLabelsLocal(es))
+      val dist = Analytics.modularityBreakdown(e, Analytics.lpaLabels(e))
+      assert(local.schema.map(f => f.name -> f.dataType) == dist.schema.map(f => f.name -> f.dataType),
+        s"modularity on $g: driver schema ${local.schema.simpleString}, " +
+          s"distributed ${dist.schema.simpleString}")
+      assert(local.collect().toSeq == dist.collect().toSeq, s"modularity on $g")
+    }
+  }
+
   test("Cypher shortestPath distances: the driver plan returns the distributed plan's rows") {
     val sf = cypher.CypherLite.edgesWithProps(spark, TestSpark.sf, "CO_OCCURS", None)
       .select("src_uid", "dst_uid", "weight").barrier()
